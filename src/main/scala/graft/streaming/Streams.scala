@@ -3082,10 +3082,29 @@ object Streams {
     * never-fabricate law the readers follow). */
   private[streaming] def vacuumAffectedRead(spark: SparkSession,
       path: String, affected: Seq[Row], partCols: Seq[String]): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path).filter(
-      affected.map(r => partCols.zipWithIndex
-          .map { case (c, i) => col(c) <=> lit(r.get(i)) }.reduce(_ && _))
-        .reduce(_ || _))
+    spark.read.option("mergeSchema", "true").parquet(path)
+      .filter(affectedPredicate(affected, partCols))
+
+  /** The OR-of-ANDs of null-safe literal partition equalities selecting
+    * `affected`, its disjuncts in partition-value order (nulls first).
+    * `affected` arrives in `collect()` order, which varies run to run;
+    * the literals are inlined into the generated code, so an unsorted
+    * predicate compiled a new class for the same vacuum on every run. */
+  private def affectedPredicate(affected: Seq[Row],
+                                partCols: Seq[String]): Column = {
+    val byValues: Ordering[Row] = (a, b) =>
+      partCols.indices.iterator.map { i =>
+        (a.get(i), b.get(i)) match {
+          case (null, null) => 0
+          case (null, _) => -1
+          case (_, null) => 1
+          case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+        }
+      }.find(_ != 0).getOrElse(0)
+    affected.sorted(byValues).map(r => partCols.zipWithIndex
+        .map { case (c, i) => col(c) <=> lit(r.get(i)) }.reduce(_ && _))
+      .reduce(_ || _)
+  }
 
   // ------------------------------ refs summaries (vacuum detection pruning)
 
@@ -3435,11 +3454,9 @@ object Streams {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val refs = new org.apache.hadoop.fs.Path(root, RefsDir)
     if (!refsHasData(fs, refs)) return false
-    // `<=>`: same null-safe spelling as vacuumAffectedRead, so a
+    // `<=>`: same null-safe predicate as vacuumAffectedRead, so a
     // null-valued affected partition's summary row is replaced too
-    val affectedPred = affected.map(r => partCols.zipWithIndex
-        .map { case (c, i) => col(c) <=> lit(r.get(i)) }.reduce(_ && _))
-      .reduce(_ || _)
+    val affectedPred = affectedPredicate(affected, partCols)
     val old = spark.read.option("mergeSchema", "true")
       .parquet(refs.toString)
     // the sidecar's own schema says which families it maintains: bloom

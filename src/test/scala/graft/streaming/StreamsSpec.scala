@@ -2704,6 +2704,16 @@ class StreamsSpec extends SparkSpec {
     assert(scanned === 2, s"must list 2 affected dirs, scanned $scanned")
     assert(rowsOf(read.select(col("doc_id"))) ===
       Seq(Seq("11"), Seq("12"), Seq("31"), Seq("32")))
+    // the literals are inlined into generated code: the same affected
+    // set in any collect() order must build the same predicate
+    def cond(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          f.condition.sql
+      }
+    val reversed = Streams.vacuumAffectedRead(spark, log, affected.reverse,
+      Seq("batch_id"))
+    assert(cond(reversed) === cond(read))
   }
 
   test("retention composes with compaction: fold first, then expire from the merged partition") {
