@@ -750,15 +750,12 @@ object CurationStress {
     graft.streaming.Streams.orderedChunkFeed(
       Tables.documents(spark, stressDir).select(col("doc_id"), col("text")),
       s"$ingestDir/feed", 4, col("doc_id"))
-    val stream206 = ss206.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id bigint, text string"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$ingestDir/feed")
+    val stream206 = graft.streaming.Streams.fileFeed(ss206,
+      "doc_id bigint, text string", s"$ingestDir/feed")
     val (_, tIngest) = time {
-      graft.streaming.Streams.incrementalLshDedup(stream206,
-        s"$ingestDir/index", s"$ingestDir/pairs", s"$ingestDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
+      graft.streaming.Streams.runToCompletion(
+        graft.streaming.Streams.incrementalLshDedup(stream206,
+          s"$ingestDir/index", s"$ingestDir/pairs", s"$ingestDir/ckpt"))
     }
     val pairLog = spark.read.parquet(s"$ingestDir/pairs")
       .select(col("doc_a"), col("doc_b")).distinct().persist()

@@ -2,8 +2,6 @@ package graft
 
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 /** Throwaway phase-timing probe for the q216-family lifecycle rows
   * (not part of the driver contract): feed → ingest → vacuum(index) →
@@ -37,12 +35,9 @@ object LifecycleProbe {
         docs.repartition(4).write.parquet(s"$work/chunks")
       }
       t("ingest (4 batches)") {
-        val stream = ss.readStream
-          .schema(StructType.fromDDL("doc_id bigint, text string"))
-          .option("maxFilesPerTrigger", "1").parquet(s"$work/chunks")
-        Streams.incrementalLshDedup(stream, s"$work/index", s"$work/pairs",
-          s"$work/ckpt").trigger(Trigger.AvailableNow()).start()
-          .awaitTermination()
+        Streams.runToCompletion(Streams.incrementalLshDedup(
+          Streams.fileFeed(ss, "doc_id bigint, text string", s"$work/chunks"),
+          s"$work/index", s"$work/pairs", s"$work/ckpt"))
       }
       val tombs = Tables.documents(spark, sfDir)
         .filter(col("doc_id") % 10 === 3).select(col("doc_id"))

@@ -2,8 +2,6 @@ package graft
 
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 /** Throwaway phase-timing probe for the q159 incremental pipeline
   * (not part of the driver contract). */
@@ -27,17 +25,16 @@ object PipeProbe {
             col("text"), col("n_chars")),
           s"$work/feed", 4, col("doc_id"))
       }
-      val stream = spark.readStream
-        .schema(StructType.fromDDL(
-          "source string, doc_id bigint, text string, n_chars bigint"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
+      val stream = Streams.fileFeed(spark,
+        "source string, doc_id bigint, text string, n_chars bigint",
+        s"$work/feed")
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       t(s"run$run ingest") {
         try {
           spark.conf.set("spark.sql.shuffle.partitions", "8")
-          Streams.incrementalPipeline(stream, s"$work/fp", s"$work/survivors",
-            s"$work/lsh", s"$work/pairs", s"$work/ckpt")
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
+          Streams.runToCompletion(Streams.incrementalPipeline(stream,
+            s"$work/fp", s"$work/survivors", s"$work/lsh", s"$work/pairs",
+            s"$work/ckpt"))
         } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
       }
       t(s"run$run finalize") {

@@ -93,18 +93,16 @@ object StreamBench {
     * (events, seconds) for the timed replay of all `batches`. */
   private def runStateful(spark: SparkSession, sfDir: String,
                           batches: Int): (Long, Double) = {
-    import graft.streaming.StatefulTransitions
-    import org.apache.spark.sql.streaming.Trigger
-    val dir = graft.streaming.Streams.scratchDir("graft_statebench")
+    import graft.streaming.{StatefulTransitions, Streams}
+    val dir = Streams.scratchDir("graft_statebench")
     StatefulTransitions.stageOrderedFeed(spark, sfDir, s"$dir/feed", batches)
     val nEv = spark.read.parquet(s"$dir/feed").count()
     def run(tag: String): Double = {
       val t0 = System.nanoTime()
-      StatefulTransitions.transitions(
+      Streams.runToCompletion(StatefulTransitions.transitions(
           StatefulTransitions.feedStream(spark, s"$dir/feed")).writeStream
         .format("noop").option("checkpointLocation", s"$dir/ckpt_$tag")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        .outputMode(OutputMode.Append()))
       (System.nanoTime() - t0) / 1e9
     }
     run("warm")
@@ -125,16 +123,14 @@ object StreamBench {
     * triggers over large state). */
   private def runReplicated(spark: SparkSession, feedDir: String,
                             tag: String, timed: Int = 3): Seq[Double] = {
-    import graft.streaming.StatefulTransitions
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.{StatefulTransitions, Streams}
     def once(i: Int): Double = {
       val t0 = System.nanoTime()
-      StatefulTransitions.transitions(
+      Streams.runToCompletion(StatefulTransitions.transitions(
           StatefulTransitions.feedStream(spark, feedDir)).writeStream
         .format("noop").option("checkpointLocation",
           s"$feedDir/../ckpt_${tag}_$i")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        .outputMode(OutputMode.Append()))
       (System.nanoTime() - t0) / 1e9
     }
     once(-1) // JIT + provider warmup

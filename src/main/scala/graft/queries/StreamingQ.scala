@@ -1,10 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import graft.streaming.{Manifests, Streams}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.{Manifests, StatefulTransitions, Streams}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
 /** Batch-snapshot wrappers that put the STREAMING state path itself on
@@ -30,11 +30,6 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamingQ {
 
-  /** Opt-in sub-phase timing (`-Dgraft.phaseLog=1`) — the row-level
-    * twin of [[graft.streaming.Streams]]' internal phase logger, for
-    * attributing composed-lifecycle costs (feed / stream run / vacuum /
-    * audit) inside a single registered row. Dev-only; zero-cost off. */
-  private val PhaseLog = sys.props.get("graft.phaseLog").contains("1")
   /** Dev-only (`-Dgraft.phaseLog=1`): per-micro-batch progress dump of
     * a finished stream — durationMs split (addBatch / walCommit /
     * commitOffsets / queryPlanning) and the state operators' commit
@@ -42,21 +37,13 @@ object StreamingQ {
     * machinery vs harness. Zero-cost off. */
   private def qprogress(label: String,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (PhaseLog) q.recentProgress.foreach { p =>
+    if (Streams.PhaseLog) q.recentProgress.foreach { p =>
       val st = p.stateOperators.map(o =>
         s"${o.operatorName}{rows=${o.numRowsTotal},upd=${o.allUpdatesTimeMs}" +
           s"ms,rm=${o.allRemovalsTimeMs}ms,commit=${o.commitTimeMs}ms}")
         .mkString(" ")
       println(s"[qprog] $label batch=${p.batchId} dur=${p.durationMs} $st")
     }
-  @inline private def qphase[A](label: String)(f: => A): A =
-    if (!PhaseLog) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[qphase] $label%-30s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-
   /** A CHILD session pinned to 8 shuffle partitions for the streaming
     * runs (SQL configs are session-scoped; `newSession` shares the
     * SparkContext and catalog but gets its own conf). The monitors'
@@ -70,18 +57,6 @@ object StreamingQ {
   private def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
-    // state-store provider A/B hook (-Dgraft.stateStore=rocksdb): the
-    // default HDFS-backed in-memory provider wins at this corpus size
-    // (AbBench medians in PLANS.md — RocksDB pays native column-family
-    // commit overhead per store per micro-batch that in-memory maps
-    // don't, while the state here is far too small to page); at
-    // production state sizes (state >> executor heap, or sub-second
-    // triggers needing changelog checkpointing) flip this to rocksdb —
-    // the hook is the one-line switch, sticky per checkpoint.
-    if (sys.props.get("graft.stateStore").contains("rocksdb"))
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state" +
-          ".RocksDBStateStoreProvider")
     ss
   }
 
@@ -100,26 +75,27 @@ object StreamingQ {
     ss
   }
 
-  /** Stream a base frame through `run` in ~4 micro-batches (file
-    * source, one file per trigger), then hand the work dir to the
-    * caller's snapshot — ONE chunking/readStream scaffold for every
+  /** Stream a base frame in ~4 micro-batches (file source, one file
+    * per trigger) through the stream `run` builds over it, run that
+    * stream to completion, then hand the work dir to the caller's
+    * snapshot — ONE chunking/readStream/run scaffold for every
     * wrapper, whatever the table. */
   private def streamedFrame(s: SparkSession, base: DataFrame,
                             schemaDdl: String)
-                           (run: (DataFrame, String) => Unit): String = {
+                           (run: (DataFrame, String) => DataStreamWriter[Row])
+      : String = {
     val work = Streams.scratchDir("graft_incq")
     base.repartition(4).write.parquet(s"$work/chunks")
-    val stream = streamSession(s).readStream
-      .schema(StructType.fromDDL(schemaDdl))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/chunks")
-    run(stream, work)
+    Streams.runToCompletion(run(
+      Streams.fileFeed(streamSession(s), schemaDdl, s"$work/chunks"), work))
     work
   }
 
   /** [[streamedFrame]] over `cols` of the documents table. */
   private def streamed(s: SparkSession, dir: String, cols: Seq[String],
                        schemaDdl: String)
-                      (run: (DataFrame, String) => Unit): String =
+                      (run: (DataFrame, String) => DataStreamWriter[Row])
+      : String =
     streamedFrame(s, Tables.documents(s, dir).select(cols.map(col): _*),
       schemaDdl)(run)
 
@@ -130,7 +106,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "text"),
       "source string, text string") { (docs, work) =>
       Streams.incrementalSourceTokens(docs, s"$work/tokens", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.mixtureWeightsSnapshot(s, s"$work/tokens")
   }
@@ -143,7 +118,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "text"),
       "source string, text string") { (docs, work) =>
       Streams.incrementalOovStats(docs, vocab, s"$work/stats", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.oovRateSnapshot(s, s"$work/stats")
   }
@@ -176,7 +150,7 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "text"),
       "doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalLshDedup(docs, s"$work/index", s"$work/pairs",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/ckpt")
     }
     Dedup.jaccardVerify(
       s.read.parquet(s"$work/pairs").select(col("doc_a"), col("doc_b")).distinct(),
@@ -193,7 +167,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "text"),
       "source string, text string") { (docs, work) =>
       Streams.incrementalLexicon(docs, s"$work/lex", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.lexicalDiversitySnapshot(s, s"$work/lex")
   }
@@ -258,14 +231,13 @@ object StreamingQ {
     // harness's corpus size 8 state partitions is the right grain (a
     // real deployment sizes this to keys/executor, set once — it is
     // sticky in the checkpoint). Child session: see streamSession.
-    val stream = streamSession(s).readStream
-      .schema(StructType.fromDDL("user_id bigint, ts timestamp_ltz"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    StatefulSessions.sessionize(stream.as[Event]).writeStream
-      .format("parquet").option("path", s"$work/sessions")
-      .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val stream = Streams.fileFeed(streamSession(s),
+      "user_id bigint, ts timestamp_ltz", s"$work/feed")
+    Streams.runToCompletion(
+      StatefulSessions.sessionize(stream.as[Event]).writeStream
+        .format("parquet").option("path", s"$work/sessions")
+        .option("checkpointLocation", s"$work/ckpt")
+        .outputMode(OutputMode.Append()))
     s.read.parquet(s"$work/sessions")
       .filter(col("user_id") =!= flushUser)
       .groupBy(col("user_id"))
@@ -276,7 +248,8 @@ object StreamingQ {
   /** [[streamedFrame]] over `cols` of the events table. */
   private def streamedEvents(s: SparkSession, dir: String, cols: Seq[String],
                              schemaDdl: String)
-                            (run: (DataFrame, String) => Unit): String =
+                            (run: (DataFrame, String) => DataStreamWriter[Row])
+      : String =
     streamedFrame(s, Tables.events(s, dir).select(cols.map(col): _*),
       schemaDdl)(run)
 
@@ -290,7 +263,6 @@ object StreamingQ {
     val work = streamedEvents(s, dir, Seq("ts", "event_type"),
       "ts timestamp_ntz, event_type string") { (events, work) =>
       Streams.incrementalDayTypeCells(events, s"$work/cells", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.chi2Snapshot(s, s"$work/cells")
   }
@@ -306,7 +278,7 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "doc_id", "text"),
       "source string, doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalSegmentDedup(docs, s"$work/claims", s"$work/docs",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/ckpt")
     }
     Streams.segmentDedupSnapshot(s, s"$work/claims", s"$work/docs")
   }
@@ -322,8 +294,7 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "source", "text"),
       "doc_id bigint, source string, text string") { (docs, work) =>
       Streams.incrementalCappedDedup(docs, s"$work/claims", s"$work/copies",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
+        s"$work/ckpt")
     }
     Streams.cappedDedupSnapshot(s, s"$work/claims", s"$work/copies")
   }
@@ -339,7 +310,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "text"),
       "source string, text string") { (docs, work) =>
       Streams.incrementalOverlapSketch(docs, s"$work/sketch", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.overlapSnapshot(s, s"$work/sketch")
   }
@@ -358,7 +328,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "source", "text"),
       "doc_id bigint, source string, text string") { (docs, work) =>
       Streams.incrementalBudgetSelection(docs, s"$work/scored", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.budgetSnapshot(s, s"$work/scored")
   }
@@ -376,7 +345,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "source", "text"),
       "doc_id bigint, source string, text string") { (docs, work) =>
       Streams.incrementalFrontier(docs, s"$work/frontier", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.frontierSnapshot(s, s"$work/frontier")
   }
@@ -389,7 +357,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "source", "text"),
       "doc_id bigint, source string, text string") { (docs, work) =>
       Streams.incrementalBudgetSelection(docs, s"$work/scored", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.sourceBudgetSnapshot(s, s"$work/scored")
   }
@@ -404,7 +371,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "source", "text"),
       "doc_id bigint, source string, text string") { (docs, work) =>
       Streams.incrementalBudgetSelection(docs, s"$work/scored", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.curriculumSnapshot(s, s"$work/scored")
   }
@@ -418,7 +384,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "n_chars"),
       "source string, n_chars bigint") { (docs, work) =>
       Streams.incrementalLengthHistogram(docs, s"$work/hist", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.winsorizeSnapshot(s, s"$work/hist")
   }
@@ -430,7 +395,6 @@ object StreamingQ {
     val work = streamedEvents(s, dir, Seq("ts", "event_type"),
       "ts timestamp_ntz, event_type string") { (events, work) =>
       Streams.incrementalHourlyCounts(events, s"$work/counts", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.rateAnomalySnapshot(s, s"$work/counts")
   }
@@ -443,7 +407,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "text"),
       "doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalSplitGuard(docs, s"$work/fps", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.splitGuardSnapshot(s, s"$work/fps")
   }
@@ -456,7 +419,6 @@ object StreamingQ {
   def q189IncrementalCms(s: SparkSession, dir: String): DataFrame = {
     val work = streamed(s, dir, Seq("text"), "text string") { (docs, work) =>
       Streams.incrementalCms(docs, s"$work/cells", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Stats.cmsHeavyHittersFrom(Stats.corpusTokens(s, dir),
       Streams.cmsSnapshot(s, s"$work/cells"))
@@ -471,7 +433,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "text"),
       "source string, text string") { (docs, work) =>
       Streams.incrementalSourceSignatures(docs, s"$work/sigs", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     graft.queries.Dedup.signatureMatchCensus(
       Streams.sourceSignatureSnapshot(s, s"$work/sigs"))
@@ -486,7 +447,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "text"),
       "doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalNoveltyCurve(docs, s"$work/grams", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.noveltyCurveExactSnapshot(s, s"$work/grams")
   }
@@ -518,7 +478,7 @@ object StreamingQ {
     val work = Streams.scratchDir("graft_q175")
     // stage only the two subscribed types (a production stream IS the
     // filtered topic); the legs' filters below stay as the contract
-    qphase("q175 feed") {
+    Streams.phase("q175 feed") {
       Streams.orderedChunkFeed(
         Tables.events(s, dir).select(col("user_id"),
           col("ts").cast("timestamp_ltz").as("ts"),
@@ -541,10 +501,7 @@ object StreamingQ {
     // the-watermark-passes still runs in every data batch (state
     // metrics: rm>0 from batch 1 on).
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val feed = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id bigint, ts timestamp_ltz, event_type string, event_id bigint"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
+    val feed = Streams.fileFeed(ss, StatefulTransitions.FeedDdl, s"$work/feed")
     val v = feed.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("v_ts"), col("event_id").as("v_id"))
       .withWatermark("v_ts", "1 hour")
@@ -552,18 +509,15 @@ object StreamingQ {
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
       .withWatermark("c_ts", "1 hour")
-    qphase("q175 stream run") {
-      val q = v.join(c, expr(
+    Streams.phase("q175 stream run") {
+      qprogress("q175", Streams.runToCompletion(v.join(c, expr(
           """user_id = c_user AND c_ts > v_ts
             |AND c_ts <= v_ts + INTERVAL 24 HOURS""".stripMargin))
         .select(col("user_id"), col("v_id"), col("c_id"),
           (unix_micros(col("c_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
         .writeStream.format("parquet").option("path", s"$work/pairs")
         .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      qprogress("q175", q)
+        .outputMode(OutputMode.Append())))
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
         "user_id bigint, v_id bigint, c_id bigint, gap_us bigint"))
@@ -595,7 +549,7 @@ object StreamingQ {
       col("ts").cast("timestamp_ltz").as("ts"),
       col("event_type"), col("event_id"))
       .filter(col("event_type").isin("view", "click")) // q175's topic note
-    qphase("q176 feed") {
+    Streams.phase("q176 feed") {
       Streams.orderedChunkFeed(ev, s"$work/feed", 4,
         col("ts"), col("event_id"))
       val sentinels = ev.agg(max(col("ts")).as("mx"))
@@ -612,10 +566,8 @@ object StreamingQ {
     }
     // 8 state-store partitions, as in q175 (the outer join also pays
     // the eviction/no-data batches — store count is the lever)
-    val feed = streamSession(s).readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id bigint, ts timestamp_ltz, event_type string, event_id bigint"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
+    val feed = Streams.fileFeed(streamSession(s), StatefulTransitions.FeedDdl,
+      s"$work/feed")
     val v = feed.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("v_ts"), col("event_id").as("v_id"))
       .withWatermark("v_ts", "1 hour")
@@ -623,17 +575,14 @@ object StreamingQ {
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
       .withWatermark("c_ts", "1 hour")
-    qphase("q176 stream run") {
-      val q = v.join(c, expr(
+    Streams.phase("q176 stream run") {
+      qprogress("q176", Streams.runToCompletion(v.join(c, expr(
           """user_id = c_user AND c_ts > v_ts
             |AND c_ts <= v_ts + INTERVAL 24 HOURS""".stripMargin), "leftOuter")
         .select(col("user_id"), col("v_id"), col("c_id"))
         .writeStream.format("parquet").option("path", s"$work/rows")
         .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      qprogress("q176", q)
+        .outputMode(OutputMode.Append())))
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
         "user_id bigint, v_id bigint, c_id bigint"))
@@ -677,16 +626,13 @@ object StreamingQ {
     // for the reason q175 skips it; eviction still runs in every data
     // batch as the watermark passes.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val feed = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id bigint, ts timestamp_ltz, event_type string, event_id bigint"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    feed.withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.format("parquet").option("path", s"$work/rows")
-      .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    Streams.runToCompletion(
+      Streams.fileFeed(ss, StatefulTransitions.FeedDdl, s"$work/feed")
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("event_id")
+        .writeStream.format("parquet").option("path", s"$work/rows")
+        .option("checkpointLocation", s"$work/ckpt")
+        .outputMode(OutputMode.Append()))
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
         "user_id bigint, event_type string, event_id bigint")) // ts projected out
       .parquet(s"$work/rows")
@@ -720,7 +666,7 @@ object StreamingQ {
       col("ts").cast("timestamp_ltz").as("ts"),
       col("event_type"), col("event_id"))
       .filter(col("event_type").isin("view", "click")) // q175's topic note
-    qphase("q179 feed") {
+    Streams.phase("q179 feed") {
       Streams.orderedChunkFeed(ev, s"$work/feed", 4,
         col("ts"), col("event_id"))
       val sentinels = ev.agg(max(col("ts")).as("mx"))
@@ -735,10 +681,8 @@ object StreamingQ {
       Streams.orderedChunkFeed(sentinels, s"$work/feed", 1,
         col("ts"), col("event_id"))
     }
-    val feed = streamSession(s).readStream // 8 store partitions (q175)
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id bigint, ts timestamp_ltz, event_type string, event_id bigint"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
+    val feed = Streams.fileFeed(streamSession(s), // 8 store partitions (q175)
+      StatefulTransitions.FeedDdl, s"$work/feed")
     val v = feed.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("v_id"))
@@ -747,15 +691,14 @@ object StreamingQ {
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
       .withWatermark("c_ts", "1 hour")
-    qphase("q179 stream run") {
-      v.join(c, expr(
+    Streams.phase("q179 stream run") {
+      Streams.runToCompletion(v.join(c, expr(
           """v_user = c_user AND c_ts > v_ts
             |AND c_ts <= v_ts + INTERVAL 24 HOURS""".stripMargin), "fullOuter")
         .select(col("v_user"), col("c_user"), col("v_id"), col("c_id"))
         .writeStream.format("parquet").option("path", s"$work/rows")
         .option("checkpointLocation", s"$work/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        .outputMode(OutputMode.Append()))
     }
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
         "v_user bigint, c_user bigint, v_id bigint, c_id bigint"))
@@ -838,18 +781,16 @@ object StreamingQ {
           StructType.fromDDL("user_id bigint, ts timestamp_ltz")),
         s"$work/feed", 1, col("ts"))
     }
-    val stream = streamSession(s).readStream // 8 store partitions (q113)
-      .schema(StructType.fromDDL("user_id bigint, ts timestamp_ltz"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    stream.withWatermark("ts", "10 minutes")
+    val stream = Streams.fileFeed(streamSession(s), // 8 store partitions (q113)
+      "user_id bigint, ts timestamp_ltz", s"$work/feed")
+    Streams.runToCompletion(stream.withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "30 minutes 1 microsecond").as("w"),
         col("user_id"))
       .agg(count(lit(1)).as("events_in_session"))
       .select(col("user_id"), col("events_in_session"))
       .writeStream.format("parquet").option("path", s"$work/sessions")
       .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      .outputMode(OutputMode.Append()))
     s.read.schema(StructType.fromDDL(
         "user_id bigint, events_in_session bigint"))
       .parquet(s"$work/sessions")
@@ -896,11 +837,9 @@ object StreamingQ {
         StructType.fromDDL(
           "ts timestamp_ltz, event_type string, value double")),
       s"$work/feed", 1, col("ts"))
-    val stream = streamSession(s).readStream // 8 store partitions (q113)
-      .schema(StructType.fromDDL(
-        "ts timestamp_ltz, event_type string, value double"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    stream.withWatermark("ts", "10 minutes")
+    val stream = Streams.fileFeed(streamSession(s), // 8 store partitions (q113)
+      "ts timestamp_ltz, event_type string, value double", s"$work/feed")
+    Streams.runToCompletion(stream.withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("event_count"),
         sum(floor(col("value") * 100).cast("long")).as("value_cents"))
@@ -908,8 +847,7 @@ object StreamingQ {
         col("event_type"), col("event_count"), col("value_cents"))
       .writeStream.format("parquet").option("path", s"$work/windows")
       .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      .outputMode(OutputMode.Append()))
     s.read.schema(StructType.fromDDL("hour_start bigint, " +
         "event_type string, event_count bigint, value_cents bigint"))
       .parquet(s"$work/windows")
@@ -943,17 +881,14 @@ object StreamingQ {
     val dim = graft.Tables.customer(ss, dir)
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment"))
-    val stream = ss.readStream
-      .schema(StructType.fromDDL(
-        "user_id bigint, event_type string, value double"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    stream.join(broadcast(dim), Seq("user_id"))
+    val stream = Streams.fileFeed(ss,
+      "user_id bigint, event_type string, value double", s"$work/feed")
+    Streams.runToCompletion(stream.join(broadcast(dim), Seq("user_id"))
       .select(col("segment"), col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
       .writeStream.format("parquet").option("path", s"$work/rows")
       .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      .outputMode(OutputMode.Append()))
     s.read.schema(StructType.fromDDL(
         "segment string, event_type string, cents bigint"))
       .parquet(s"$work/rows")
@@ -1014,11 +949,10 @@ object StreamingQ {
     val ss = if (rocksdb) rocksSession(s) else streamSession(s)
     val feed = StatefulTransitions.feedStream(ss, s"$work/feed")
       .map(e => SEvent(e.user_id, e.ts, e.event_type, e.event_id))(ee)
-    machine(feed, flushUs).writeStream
+    Streams.runToCompletion(machine(feed, flushUs).writeStream
       .format("parquet").option("path", s"$work/intervals")
       .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      .outputMode(OutputMode.Append()))
     s.read.parquet(s"$work/intervals")
       .filter(col("user_id") =!= flushUser)
       .groupBy(col("event_type"))
@@ -1056,7 +990,6 @@ object StreamingQ {
         docs.select(col("doc_id"), col("source"),
           graft.ops.TextOps.fingerprint(col("text")).as("fp")),
         s"$work/manifest", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     val bManifest = s.read
       .schema(StructType.fromDDL(
@@ -1098,7 +1031,6 @@ object StreamingQ {
           .writeStream.format("parquet").option("path", s"$work/kept")
           .option("checkpointLocation", s"$work/ckpt")
           .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     val kept = s.read.schema(StructType.fromDDL(ddl)).parquet(s"$work/kept")
     val staged = s.read.schema(StructType.fromDDL(ddl))
@@ -1157,7 +1089,6 @@ object StreamingQ {
       Streams.incrementalExpectations(
         events.join(broadcast(active), col("user_id") === col("pk"), "left"),
         s"$work/checks", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.expectationsSnapshot(s, s"$work/checks")
   }
@@ -1201,7 +1132,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "doc_id", "text"),
       "source string, doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalIntegrityRoots(docs, s"$work/roots", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.integrityRootsSnapshot(s, s"$work/roots")
   }
@@ -1224,8 +1154,7 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "doc_id", "text"),
       "source string, doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalContamination(docs, bench, s"$work/hits",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
+        s"$work/ckpt")
     }
     Streams.contaminationSnapshot(s, s"$work/hits")
   }
@@ -1252,8 +1181,7 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "text"),
       "doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalLshDedup(docs, s"$work/index", s"$work/pairs",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
+        s"$work/ckpt")
     }
     Dedup.clustersFromEdgesCounted(Dedup.verifiedEdgesFromLog(
       s.read.parquet(s"$work/pairs"), Tables.documents(s, dir)))._1
@@ -1276,7 +1204,6 @@ object StreamingQ {
       "doc_id bigint, source string, lang string, text string") {
       (docs, work) =>
         Streams.incrementalDatasetCard(docs, work, s"$work/ckpt")
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.datasetCardSnapshot(s, work, Tables.documents(s, dir))
   }
@@ -1296,8 +1223,7 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "source", "text"),
       "doc_id bigint, source string, text string") { (docs, work) =>
       Streams.incrementalWritePathGate(docs, bench, s"$work/census",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
+        s"$work/ckpt")
     }
     Streams.writePathGateSnapshot(s, s"$work/census")
   }
@@ -1312,7 +1238,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("lang", "text"),
       "lang string, text string") { (docs, work) =>
       Streams.incrementalCalibration(docs, s"$work/bins", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.calibrationSnapshot(s, s"$work/bins")
   }
@@ -1331,7 +1256,6 @@ object StreamingQ {
     val work = streamedFrame(s, Layout.dayAndCust(s, dir),
       "day bigint, o_custkey bigint") { (facts, work) =>
       Streams.incrementalZorder(facts, s"$work/index", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.zorderSnapshot(s, s"$work/index")
   }
@@ -1436,12 +1360,12 @@ object StreamingQ {
     val work = Streams.scratchDir(tag)
     StatefulTransitions.stageOrderedFeed(s, dir, s"$work/feed", 6)
     val ss = if (rocksdb) rocksSession(s) else streamSession(s)
-    machine(StatefulTransitions.feedStream(ss, s"$work/feed"))
-      .writeStream
-      .format("parquet").option("path", s"$work/trans")
-      .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    Streams.runToCompletion(
+      machine(StatefulTransitions.feedStream(ss, s"$work/feed"))
+        .writeStream
+        .format("parquet").option("path", s"$work/trans")
+        .option("checkpointLocation", s"$work/ckpt")
+        .outputMode(OutputMode.Append()))
     val matrix = s.read.parquet(s"$work/trans")
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("transitions"))
@@ -1484,7 +1408,6 @@ object StreamingQ {
       "source string, doc_id bigint, n_chars bigint") { (docs, work) =>
       Streams.incrementalQuantileSample(docs, s"$work/sample", s"$work/ckpt",
         Stats.QuantileRegK)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.quantileSnapshot(s, s"$work/sample",
       Stats.exactMedianOf(Tables.documents(s, dir)), Stats.QuantileRegK)
@@ -1507,7 +1430,7 @@ object StreamingQ {
         col("embedding").cast("array<double>").as("v")),
       "vec_id bigint, v array<double>") { (emb, work) =>
       Streams.incrementalAnnNearDups(emb, s"$work/index", s"$work/pairs",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/ckpt")
     }
     s.read.parquet(s"$work/pairs")
       .select(col("bucket"), col("vec_a"), col("vec_b"), col("cos_sim"))
@@ -1528,14 +1451,9 @@ object StreamingQ {
     val work = Streams.scratchDir("graft_incq")
     val emb = Tables.embeddings(s, dir).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    def run(): Unit = {
-      val stream = streamSession(s).readStream
-        .schema(StructType.fromDDL("vec_id bigint, v array<double>"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-      Streams.incrementalAnnNearDups(stream, s"$work/index", s"$work/pairs",
-        s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    }
+    def run(): Unit = Streams.runToCompletion(Streams.incrementalAnnNearDups(
+      Streams.fileFeed(streamSession(s), "vec_id bigint, v array<double>",
+        s"$work/feed"), s"$work/index", s"$work/pairs", s"$work/ckpt"))
     Streams.orderedChunkFeed(emb.filter(col("vec_id") % 2 === 0),
       s"$work/feed", 2, col("vec_id"))
     run()
@@ -1560,7 +1478,6 @@ object StreamingQ {
       Tables.embeddings(s, dir).select(col("label"), col("embedding")),
       "label int, embedding array<float>") { (emb, work) =>
       Streams.incrementalCentroids(emb, s"$work/cent", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.centroidSnapshot(s, s"$work/cent")
   }
@@ -1577,7 +1494,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "doc_id", "text"),
       "source string, doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalKmv(docs, s"$work/kmv", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Stats.kmvCensus(Streams.kmvSnapshot(s, s"$work/kmv"),
       Stats.chunkAuditDistinct(Tables.documents(s, dir)))
@@ -1599,22 +1515,20 @@ object StreamingQ {
     * pipeline's packed manifest bit-for-bit. */
   def q159IncrementalPipeline(s: SparkSession, dir: String): DataFrame = {
     val work = Streams.scratchDir("graft_incq")
-    qphase("q159 feed") {
+    Streams.phase("q159 feed") {
       Streams.orderedChunkFeed(
         Tables.documents(s, dir).select(col("source"), col("doc_id"),
           col("text"), col("n_chars")),
         s"$work/feed", 4, col("doc_id"))
     }
-    qphase("q159 ingest") {
-      val stream = streamSession(s).readStream
-        .schema(StructType.fromDDL(
-          "source string, doc_id bigint, text string, n_chars bigint"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-      Streams.incrementalPipeline(stream, s"$work/fp", s"$work/survivors",
-        s"$work/lsh", s"$work/pairs", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    Streams.phase("q159 ingest") {
+      val stream = Streams.fileFeed(streamSession(s),
+        "source string, doc_id bigint, text string, n_chars bigint",
+        s"$work/feed")
+      Streams.runToCompletion(Streams.incrementalPipeline(stream, s"$work/fp",
+        s"$work/survivors", s"$work/lsh", s"$work/pairs", s"$work/ckpt"))
     }
-    qphase("q159 finalize") {
+    Streams.phase("q159 finalize") {
       Streams.finalizePipeline(s, s"$work/survivors", s"$work/pairs")
     }
   }
@@ -1634,14 +1548,9 @@ object StreamingQ {
   def q162CompactedLshIndex(s: SparkSession, dir: String): DataFrame = {
     val work = Streams.scratchDir("graft_incq")
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    def run(): Unit = {
-      val stream = streamSession(s).readStream
-        .schema(StructType.fromDDL("doc_id bigint, text string"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-      Streams.incrementalLshDedup(stream, s"$work/index", s"$work/pairs",
-        s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    }
+    def run(): Unit = Streams.runToCompletion(Streams.incrementalLshDedup(
+      Streams.fileFeed(streamSession(s), "doc_id bigint, text string",
+        s"$work/feed"), s"$work/index", s"$work/pairs", s"$work/ckpt"))
     Streams.orderedChunkFeed(docs.filter(col("doc_id") % 2 === 0),
       s"$work/feed", 2, col("doc_id"))
     run()
@@ -1668,7 +1577,6 @@ object StreamingQ {
       "source string, doc_id bigint, n_chars bigint") { (docs, work) =>
       Streams.incrementalQuantileSample(docs, s"$work/sample", s"$work/ckpt",
         Stats.QuantileRegK)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.compactMinMergePartials(s, s"$work/sample",
       Streams.quantileSampleMerge(Stats.QuantileRegK))
@@ -1685,7 +1593,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("source", "text"),
       "source string, text string") { (docs, work) =>
       Streams.incrementalSourceTokens(docs, s"$work/tokens", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     Streams.compactSummedPartials(s, s"$work/tokens",
       _.groupBy(col("source")).agg(sum(col("tokens")).as("tokens")))
@@ -1738,11 +1645,9 @@ object StreamingQ {
         StructType.fromDDL(
           "ts timestamp_ltz, event_type string, value double")),
       s"$work/feed", 1, col("ts"))
-    val stream = streamSession(s).readStream // 8 store partitions (q113)
-      .schema(StructType.fromDDL(
-        "ts timestamp_ltz, event_type string, value double"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    stream.withWatermark("ts", "10 minutes")
+    val stream = Streams.fileFeed(streamSession(s), // 8 store partitions (q113)
+      "ts timestamp_ltz, event_type string, value double", s"$work/feed")
+    Streams.runToCompletion(stream.withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), s"$SlideLenSec seconds",
           s"$SlideStepSec seconds").as("w"),
         col("event_type"))
@@ -1752,8 +1657,7 @@ object StreamingQ {
         col("event_type"), col("event_count"), col("value_cents"))
       .writeStream.format("parquet").option("path", s"$work/windows")
       .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      .outputMode(OutputMode.Append()))
     s.read.schema(StructType.fromDDL("win_start bigint, " +
         "event_type string, event_count bigint, value_cents bigint"))
       .parquet(s"$work/windows")
@@ -1823,15 +1727,14 @@ object StreamingQ {
       s.createDataset(Seq(far, new java.sql.Timestamp(far.getTime + 60000))
         .map(t => Event(flushUser, t)))(ee).toDF(),
       s"$work/feed", 1, col("ts"))
-    val ss = rocksSession(s) // transformWithState: multi-CF state
-    val stream = ss.readStream
-      .schema(StructType.fromDDL("user_id bigint, ts timestamp_ltz"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    StatefulSessions.sessionizeTws(stream.as[Event]).writeStream
-      .format("parquet").option("path", s"$work/sessions")
-      .option("checkpointLocation", s"$work/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val stream = Streams.fileFeed(
+      rocksSession(s), // transformWithState: multi-CF state
+      "user_id bigint, ts timestamp_ltz", s"$work/feed")
+    Streams.runToCompletion(
+      StatefulSessions.sessionizeTws(stream.as[Event]).writeStream
+        .format("parquet").option("path", s"$work/sessions")
+        .option("checkpointLocation", s"$work/ckpt")
+        .outputMode(OutputMode.Append()))
     s.read.parquet(s"$work/sessions")
       .filter(col("user_id") =!= flushUser)
       .groupBy(col("user_id"))
@@ -1856,13 +1759,9 @@ object StreamingQ {
   def q215CompactedZorder(s: SparkSession, dir: String): DataFrame = {
     val work = Streams.scratchDir("graft_q215")
     val facts = graft.queries.Layout.dayAndCust(s, dir)
-    def run(): Unit = {
-      val stream = streamSession(s).readStream
-        .schema(StructType.fromDDL("day bigint, o_custkey bigint"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-      Streams.incrementalZorder(stream, s"$work/index", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    }
+    def run(): Unit = Streams.runToCompletion(Streams.incrementalZorder(
+      Streams.fileFeed(streamSession(s), "day bigint, o_custkey bigint",
+        s"$work/feed"), s"$work/index", s"$work/ckpt"))
     Streams.orderedChunkFeed(facts.filter(col("o_custkey") % 2 === 0),
       s"$work/feed", 2, col("o_custkey"))
     run()
@@ -1896,7 +1795,7 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "text"),
       "doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalLshDedup(docs, s"$work/index", s"$work/pairs",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/ckpt")
     }
     val tombs = Tables.documents(s, dir)
       .filter(col("doc_id") % TombMod === TombResidue).select(col("doc_id"))
@@ -1953,7 +1852,7 @@ object StreamingQ {
         col("embedding").cast("array<double>").as("v")),
       "vec_id bigint, v array<double>") { (emb, work) =>
       Streams.incrementalAnnNearDups(emb, s"$work/index", s"$work/pairs",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/ckpt")
     }
     val tombs = Tables.embeddings(s, dir)
       .filter(col("vec_id") % TombMod === TombResidue).select(col("vec_id"))
@@ -1990,7 +1889,6 @@ object StreamingQ {
     val work = streamed(s, dir, Seq("doc_id", "source", "text"),
       "doc_id bigint, source string, text string") { (docs, work) =>
       Streams.incrementalBudgetSelection(docs, s"$work/scored", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     val tombs = Tables.documents(s, dir)
       .filter(col("doc_id") % TombMod === TombResidue).select(col("doc_id"))
@@ -2029,14 +1927,10 @@ object StreamingQ {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     def tombsOf(sess: SparkSession) = Tables.documents(sess, dir)
       .filter(col("doc_id") % TombMod === TombResidue).select(col("doc_id"))
-    def run(gate: DataFrame => DataFrame): Unit = {
-      val stream = streamSession(s).readStream
-        .schema(StructType.fromDDL("doc_id bigint, text string"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-      Streams.incrementalLshDedup(gate(stream), s"$work/index",
-        s"$work/pairs", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    }
+    def run(gate: DataFrame => DataFrame): Unit =
+      Streams.runToCompletion(Streams.incrementalLshDedup(
+        gate(Streams.fileFeed(streamSession(s), "doc_id bigint, text string",
+          s"$work/feed")), s"$work/index", s"$work/pairs", s"$work/ckpt"))
     Streams.orderedChunkFeed(docs.filter(col("doc_id") % 4 <= 1),
       s"$work/feed", 2, col("doc_id"))
     run(identity) // pre-erasure: tombstoned docs land like any other
@@ -2086,7 +1980,6 @@ object StreamingQ {
     val work = streamedEvents(s, dir, Seq("ts", "event_type"),
       "ts timestamp_ntz, event_type string") { (events, work) =>
       Streams.incrementalHourlyCounts(events, s"$work/hours", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     val log = s.read.schema(StructType.fromDDL(
       outSchema + ", batch_id bigint")).parquet(s"$work/hours")
@@ -2125,32 +2018,6 @@ object StreamingQ {
        |WHERE hour_start >= (SELECT mx - ($RetainHours - 1) * 3600 FROM m)
        |GROUP BY 1, 2""".stripMargin
 
-  /** q223: RTBF for KEYED STREAMING STATE — the one hole verdict-r13
-    * left in the governance loop: the vacuum family (q216/q219/q220)
-    * erases every LANDED artifact, but an erased subject's rows can
-    * still live inside a running query's CHECKPOINT state (an open
-    * session here). The events table streams through the
-    * `transformWithState` sessionizer on RocksDB in event-time halves
-    * split at the corpus midpoint; mid-crawl, erasure CONTROL rows for
-    * every tombstoned user (user_id ≡ [[TombResidue]] mod [[TombMod]])
-    * ride the same keyed feed and
-    * [[graft.streaming.StatefulSessions.TwsSessionizerCtl]] clears the
-    * key's named ValueState AND deletes its live timer — the open
-    * session never happened, it does not "close". The composed
-    * lifecycle around the eviction is q221's: sessions that CLOSED
-    * pre-erasure already landed, so the sessions log (batch_id
-    * partitions + `_refs` sidecar) is tombstone-vacuumed; the crawl
-    * resumes from the same checkpoint with the q199 write-path gate
-    * dropping the subjects' later events (the operator itself keeps no
-    * per-key tombstone memory — that would be unbounded state). The
-    * residual audit measures zero landed references, and the census
-    * must equal batch q17 over the LIVE users only — erased subjects
-    * are GONE from state, log and output alike, not merely filtered.
-    * (The mid-stream state-store audit — erased keys absent from the
-    * checkpoint while live keys persist, via the statestore reader —
-    * needs a paused stream, so it lives in StreamsSpec, where the
-    * classic flatMapGroupsWithState twin is also diffed row-for-row.)
-    * Oracle: q17Sql over the live predicate (the q216 pattern). */
   /** The erased SUBJECTS of the keyed-state eviction family
     * (q223/q226/q227): every event user ≡ [[TombResidue]] mod
     * [[TombMod]] — the same one rule as the landed-artifact vacuums,
@@ -2199,6 +2066,32 @@ object StreamingQ {
       s"$what eviction left $residual landed subject rows — audit failed")
   }
 
+  /** q223: RTBF for KEYED STREAMING STATE — the one hole verdict-r13
+    * left in the governance loop: the vacuum family (q216/q219/q220)
+    * erases every LANDED artifact, but an erased subject's rows can
+    * still live inside a running query's CHECKPOINT state (an open
+    * session here). The events table streams through the
+    * `transformWithState` sessionizer on RocksDB in event-time halves
+    * split at the corpus midpoint; mid-crawl, erasure CONTROL rows for
+    * every tombstoned user (user_id ≡ [[TombResidue]] mod [[TombMod]])
+    * ride the same keyed feed and
+    * [[graft.streaming.StatefulSessions.TwsSessionizerCtl]] clears the
+    * key's named ValueState AND deletes its live timer — the open
+    * session never happened, it does not "close". The composed
+    * lifecycle around the eviction is q221's: sessions that CLOSED
+    * pre-erasure already landed, so the sessions log (batch_id
+    * partitions + `_refs` sidecar) is tombstone-vacuumed; the crawl
+    * resumes from the same checkpoint with the q199 write-path gate
+    * dropping the subjects' later events (the operator itself keeps no
+    * per-key tombstone memory — that would be unbounded state). The
+    * residual audit measures zero landed references, and the census
+    * must equal batch q17 over the LIVE users only — erased subjects
+    * are GONE from state, log and output alike, not merely filtered.
+    * (The mid-stream state-store audit — erased keys absent from the
+    * checkpoint while live keys persist, via the statestore reader —
+    * needs a paused stream, so it lives in StreamsSpec, where the
+    * classic flatMapGroupsWithState twin is also diffed row-for-row.)
+    * Oracle: q17Sql over the live predicate (the q216 pattern). */
   def q223StateEviction(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StatefulSessions
     import graft.streaming.StatefulSessions.CEvent
@@ -2222,38 +2115,34 @@ object StreamingQ {
     val cutUs = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val tombs = evictionTombsOnce(s, dir)
     def run(gated: Boolean): Unit = {
-      val ss = rocksSession(s) // transformWithState: multi-CF state
-      val stream = ss.readStream
-        .schema(StructType.fromDDL(
-          "user_id bigint, ts timestamp_ltz, erase boolean"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
+      val stream = Streams.fileFeed(
+        rocksSession(s), // transformWithState: multi-CF state
+        "user_id bigint, ts timestamp_ltz, erase boolean", s"$work/feed")
       // the write-path gate (q199): drop the erased subjects' DATA
       // rows post-erasure; control rows pass — [[evictionGate]]
       val fed = if (!gated) stream else evictionGate(stream, tombs)
-      val q = Streams.appendParquetSink(
-        StatefulSessions.sessionizeCtlTws(fed.as[CEvent]).toDF(),
-        s"$work/sessions", s"$work/ckpt", refCols = Seq("user_id"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      qprogress(s"q223 run gated=$gated", q)
+      qprogress(s"q223 run gated=$gated", Streams.runToCompletion(
+        Streams.appendParquetSink(
+          StatefulSessions.sessionizeCtlTws(fed.as[CEvent]).toDF(),
+          s"$work/sessions", s"$work/ckpt", refCols = Seq("user_id"))))
     }
     // one chunk per half: the cross-RESTART state carry (plus the
     // erase batch between) is what this row tests; multi-batch folding
     // within a run is q113/q214's covered ground — extra micro-batches
     // here only add RocksDB commit rounds
-    qphase("q223 feed half1") {
+    Streams.phase("q223 feed half1") {
       Streams.orderedChunkFeed(
         events.filter(unix_micros(col("ts")) <= cutUs)
           .withColumn("erase", lit(false)),
         s"$work/feed", 1, col("ts"))
     }
-    qphase("q223 run1")(run(gated = false)) // pre-erasure
+    Streams.phase("q223 run1")(run(gated = false)) // pre-erasure
     // landed half of the erasure: sessions that closed pre-request
-    qphase("q223 vacuum")(evictionVacuum(s, tombs, s"$work/sessions"))
+    Streams.phase("q223 vacuum")(evictionVacuum(s, tombs, s"$work/sessions"))
     // the erasure requests themselves, one control row per subject,
     // stamped just past the half-1 horizon so the watermark admits them
     val eraseTs = new java.sql.Timestamp(cutUs / 1000 + 1)
-    qphase("q223 feed erase+half2") {
+    Streams.phase("q223 feed erase+half2") {
       Streams.orderedChunkFeed(
         tombs
           .withColumn("ts", lit(eraseTs).cast("timestamp_ltz"))
@@ -2266,14 +2155,14 @@ object StreamingQ {
     }
     val far = new java.sql.Timestamp(bounds.getLong(1) / 1000 +
       48L * 3600 * 1000)
-    qphase("q223 feed sentinels") {
+    Streams.phase("q223 feed sentinels") {
       Streams.orderedChunkFeed(
         s.createDataset(Seq(far, new java.sql.Timestamp(far.getTime + 60000))
           .map(t => CEvent(flushUser, t, erase = false)))(ce).toDF(),
         s"$work/feed", 1, col("ts"))
     }
-    qphase("q223 run2")(run(gated = true)) // erase, resume, flushes
-    qphase("q223 audit")(evictionAudit(s, tombs, s"$work/sessions", "session"))
+    Streams.phase("q223 run2")(run(gated = true)) // erase, resume, flushes
+    Streams.phase("q223 audit")(evictionAudit(s, tombs, s"$work/sessions", "session"))
     s.read.parquet(s"$work/sessions")
       .filter(col("user_id") =!= flushUser)
       .groupBy(col("user_id"))
@@ -2305,28 +2194,27 @@ object StreamingQ {
     * maintained index CAN promise, and the one that gates this row, is
     * serve ≡ fresh-search.) */
   def q224IndexServe(s: SparkSession, dir: String): DataFrame = {
-    val work = qphase("q224 ingest") {
+    val work = Streams.phase("q224 ingest") {
       streamedFrame(s,
         Tables.embeddings(s, dir).select(col("vec_id"),
           col("embedding").cast("array<double>").as("v")),
         "vec_id bigint, v array<double>") { (emb, work) =>
         Streams.incrementalAnnNearDups(emb, s"$work/index", s"$work/pairs",
-          s"$work/ckpt").trigger(Trigger.AvailableNow()).start()
-          .awaitTermination()
+          s"$work/ckpt")
       }
     }
     // the full maintenance cycle lands BEFORE the read: fold the batch
     // partitions, then erase the tombstoned subjects
-    qphase("q224 compact") {
+    Streams.phase("q224 compact") {
       Streams.compactLshIndex(s, s"$work/index", bandCols = Seq("bucket_grp"))
     }
     val tombs = Tables.embeddings(s, dir)
       .filter(col("vec_id") % TombMod === TombResidue).select(col("vec_id"))
-    qphase("q224 vacuum") {
+    Streams.phase("q224 vacuum") {
       Streams.vacuumTombstoned(s, s"$work/index", tombs,
         Seq("vec_id"), Seq("bucket_grp", "batch_id"))
     }
-    val residual = qphase("q224 audit") {
+    val residual = Streams.phase("q224 audit") {
       Streams.tombstoneResiduals(s, s"$work/index", tombs, Seq("vec_id"))
     }
     require(residual == 0L,
@@ -2368,22 +2256,21 @@ object StreamingQ {
     * transparency pattern (exact for the same per-doc-signature law
     * that makes q216's oracle exact). */
   def q225DedupServe(s: SparkSession, dir: String): DataFrame = {
-    val work = qphase("q225 ingest") {
+    val work = Streams.phase("q225 ingest") {
       streamed(s, dir, Seq("doc_id", "text"),
         "doc_id bigint, text string") { (docs, work) =>
         Streams.incrementalLshDedup(docs, s"$work/index", s"$work/pairs",
-          s"$work/ckpt").trigger(Trigger.AvailableNow()).start()
-          .awaitTermination()
+          s"$work/ckpt")
       }
     }
-    qphase("q225 compact")(Streams.compactLshIndex(s, s"$work/index"))
+    Streams.phase("q225 compact")(Streams.compactLshIndex(s, s"$work/index"))
     val tombs = Tables.documents(s, dir)
       .filter(col("doc_id") % TombMod === TombResidue).select(col("doc_id"))
-    qphase("q225 vacuum") {
+    Streams.phase("q225 vacuum") {
       Streams.vacuumTombstoned(s, s"$work/index", tombs,
         Seq("doc_id"), Seq("band", "batch_id"))
     }
-    val residual = qphase("q225 audit") {
+    val residual = Streams.phase("q225 audit") {
       Streams.tombstoneResiduals(s, s"$work/index", tombs, Seq("doc_id"))
     }
     require(residual == 0L,
@@ -2392,7 +2279,7 @@ object StreamingQ {
       .filter(col("doc_id") % TombMod =!= TombResidue)
       .select(col("doc_id"), col("text"))
     val request = liveDocs.filter(col("doc_id") < ServeReqCut)
-    qphase("q225 serve") {
+    Streams.phase("q225 serve") {
       Dedup.jaccardVerify(
         Streams.lshServePairs(s, s"$work/index",
           Dedup.bandedSignatures(request)),
@@ -2446,27 +2333,24 @@ object StreamingQ {
     val flushUs = bounds.getLong(1) + 3600L * 1000000L
     val tombs = evictionTombsOnce(s, dir)
     def run(gated: Boolean): Unit = {
-      val ss = rocksSession(s) // transformWithState: multi-CF state
-      val stream = ss.readStream
-        .schema(StructType.fromDDL("user_id bigint, ts timestamp_ltz, " +
-          "event_type string, event_id bigint, erase boolean"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
+      val stream = Streams.fileFeed(
+        rocksSession(s), // transformWithState: multi-CF state
+        StatefulTransitions.FeedDdl + ", erase boolean", s"$work/feed")
       val fed = if (!gated) stream else evictionGate(stream, tombs)
-      Streams.appendParquetSink(
+      Streams.runToCompletion(Streams.appendParquetSink(
         StatefulScd2.intervalsCtlTws(fed.as[CSEvent], flushUs).toDF(),
-        s"$work/intervals", s"$work/ckpt", refCols = Seq("user_id"))
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/intervals", s"$work/ckpt", refCols = Seq("user_id")))
     }
-    qphase("q226 feed half1") {
+    Streams.phase("q226 feed half1") {
       Streams.orderedChunkFeed(
         events.filter(unix_micros(col("ts")) <= cutUs)
           .withColumn("erase", lit(false)),
         s"$work/feed", 1, col("ts"))
     }
-    qphase("q226 run1")(run(gated = false))
-    qphase("q226 vacuum")(evictionVacuum(s, tombs, s"$work/intervals"))
+    Streams.phase("q226 run1")(run(gated = false))
+    Streams.phase("q226 vacuum")(evictionVacuum(s, tombs, s"$work/intervals"))
     val eraseTs = new java.sql.Timestamp(cutUs / 1000 + 1)
-    qphase("q226 feed erase+half2+flush") {
+    Streams.phase("q226 feed erase+half2+flush") {
       Streams.orderedChunkFeed(
         tombs
           .withColumn("ts", lit(eraseTs).cast("timestamp_ltz"))
@@ -2486,8 +2370,8 @@ object StreamingQ {
           .toDF(),
         s"$work/feed", 1, col("ts"))
     }
-    qphase("q226 run2")(run(gated = true))
-    qphase("q226 audit")(evictionAudit(s, tombs, s"$work/intervals", "SCD2"))
+    Streams.phase("q226 run2")(run(gated = true))
+    Streams.phase("q226 audit")(evictionAudit(s, tombs, s"$work/intervals", "SCD2"))
     s.read.parquet(s"$work/intervals")
       .filter(col("user_id") =!= flushUser)
       .groupBy(col("event_type"))
@@ -2538,27 +2422,24 @@ object StreamingQ {
     val cutUs = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val tombs = evictionTombsOnce(s, dir)
     def run(gated: Boolean): Unit = {
-      val ss = rocksSession(s) // transformWithState: multi-CF state
-      val stream = ss.readStream
-        .schema(StructType.fromDDL("user_id bigint, ts timestamp_ltz, " +
-          "event_type string, event_id bigint, erase boolean"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
+      val stream = Streams.fileFeed(
+        rocksSession(s), // transformWithState: multi-CF state
+        StatefulTransitions.FeedDdl + ", erase boolean", s"$work/feed")
       val fed = if (!gated) stream else evictionGate(stream, tombs)
-      Streams.appendParquetSink(
+      Streams.runToCompletion(Streams.appendParquetSink(
         StatefulTransitions.transitionsCtlTws(fed.as[CTEvent]).toDF(),
-        s"$work/trans", s"$work/ckpt", refCols = Seq("user_id"))
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/trans", s"$work/ckpt", refCols = Seq("user_id")))
     }
-    qphase("q227 feed half1") {
+    Streams.phase("q227 feed half1") {
       Streams.orderedChunkFeed(
         events.filter(unix_micros(col("ts")) <= cutUs)
           .withColumn("erase", lit(false)),
         s"$work/feed", 1, col("ts"))
     }
-    qphase("q227 run1")(run(gated = false))
-    qphase("q227 vacuum")(evictionVacuum(s, tombs, s"$work/trans"))
+    Streams.phase("q227 run1")(run(gated = false))
+    Streams.phase("q227 vacuum")(evictionVacuum(s, tombs, s"$work/trans"))
     val eraseTs = new java.sql.Timestamp(cutUs / 1000 + 1)
-    qphase("q227 feed erase+half2") {
+    Streams.phase("q227 feed erase+half2") {
       Streams.orderedChunkFeed(
         tombs
           .withColumn("ts", lit(eraseTs).cast("timestamp_ltz"))
@@ -2571,8 +2452,8 @@ object StreamingQ {
           .withColumn("erase", lit(false)),
         s"$work/feed", 1, col("ts"))
     }
-    qphase("q227 run2")(run(gated = true))
-    qphase("q227 audit")(evictionAudit(s, tombs, s"$work/trans", "transition"))
+    Streams.phase("q227 run2")(run(gated = true))
+    Streams.phase("q227 audit")(evictionAudit(s, tombs, s"$work/trans", "transition"))
     matrixPpm(s.read.parquet(s"$work/trans")
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("transitions")))
@@ -2614,14 +2495,11 @@ object StreamingQ {
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType.fromDDL(outSchema))
     val cutUs = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    def run(fold: DataFrame => DataFrame): Unit = {
-      val stream = streamSession(s).readStream
-        .schema(StructType.fromDDL(
-          "ts timestamp_ltz, event_type string, value double"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-      Streams.incrementalPartials(stream, s"$work/hours", s"$work/ckpt")(fold)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    }
+    def run(fold: DataFrame => DataFrame): Unit =
+      Streams.runToCompletion(Streams.incrementalPartials(
+        Streams.fileFeed(streamSession(s),
+          "ts timestamp_ltz, event_type string, value double", s"$work/feed"),
+        s"$work/hours", s"$work/ckpt")(fold))
     Streams.orderedChunkFeed(
       events.filter(unix_micros(col("ts")) <= cutUs), s"$work/feed", 2,
       col("ts"))
@@ -2655,24 +2533,6 @@ object StreamingQ {
       |            AS BIGINT) AS value_cents
       |FROM h GROUP BY 1, 2""".stripMargin
 
-  /** q229: the q216 erasure lifecycle through the SNAPSHOT-MANIFEST
-    * layer — the atomic-commit / reader-isolation story (verdict-r14
-    * "Next round" #1) as an oracle row, not just a spec. The corpus
-    * ingests through the q107 ladder exactly as q216; then both
-    * landed artifacts get a manifest ([[Manifests.enableFromListing]])
-    * and the erasure runs as ONE [[Streams.vacuumTombstonedGroup]]:
-    * index and pair log stage fresh files next to the old and flip in
-    * a single intent-guarded group publish — a crash between the two
-    * artifacts can no longer leave them mutually inconsistent, and a
-    * reader that resolved its snapshot before the erasure keeps
-    * reading the COMPLETE pre-erasure census while the vacuum stages,
-    * commits, and even after (physical cleanup is deferred) — asserted
-    * in-row: the pre-resolved pair reader re-counts its full census
-    * AFTER the group publish. Residuals measured zero through the new
-    * snapshot. Oracle: q216Sql — the vacuumed snapshot must be
-    * indistinguishable from an index the erased docs never entered,
-    * same law as q216; green here means the manifest path changes the
-    * COMMIT protocol, not the answer. */
   /** q230: dedup-at-admission as the WRITE-PATH gate (verdict-r14
     * "Next round" #3) — q225's serve answered "is this a near-dup?"
     * read-only; here the crawler REJECTS at the door. The corpus
@@ -2695,12 +2555,10 @@ object StreamingQ {
     Streams.orderedChunkFeed(
       Tables.documents(s, dir).select(col("doc_id"), col("text")),
       s"$work/feed", 4, col("doc_id"))
-    val stream = streamSession(s).readStream
-      .schema(StructType.fromDDL("doc_id bigint, text string"))
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    Streams.gatedLshIngest(stream, s"$work/corpus", s"$work/quarantine",
-      s"$work/index", s"$work/pairs", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val stream = Streams.fileFeed(streamSession(s),
+      "doc_id bigint, text string", s"$work/feed")
+    Streams.runToCompletion(Streams.gatedLshIngest(stream, s"$work/corpus",
+      s"$work/quarantine", s"$work/index", s"$work/pairs", s"$work/ckpt"))
     val admitted = s.read.schema(StructType.fromDDL(
         "doc_id bigint, text string, batch_id bigint"))
       .parquet(s"$work/corpus")
@@ -2756,12 +2614,10 @@ object StreamingQ {
     val req = corpus.filter(col("doc_id") % ServeReqMod === ServeReqResidue)
     def build(id: Int, bands: Int, rows: Int): Unit = {
       Streams.orderedChunkFeed(corpus, s"$work/feed$id", 3, col("doc_id"))
-      val stream = streamSession(s).readStream
-        .schema(StructType.fromDDL("doc_id bigint, text string"))
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/feed$id")
-      Streams.incrementalIndexBuild(stream, root, id, bands, rows,
-        s"$work/ckpt$id")
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      val stream = Streams.fileFeed(streamSession(s),
+        "doc_id bigint, text string", s"$work/feed$id")
+      Streams.runToCompletion(Streams.incrementalIndexBuild(stream, root, id,
+        bands, rows, s"$work/ckpt$id"))
     }
     // the fresh-search law at a given geometry, restricted to the
     // request sample (either endpoint) — the serve must equal this.
@@ -2794,19 +2650,19 @@ object StreamingQ {
         .unionByName(b.exceptAll(a).select(lit(1L).as("__one"))).count()
       require(diff == 0L, s"$label: serve and fresh search differ by $diff")
     }
-    qphase("q231 build v1")(build(1, 4, 2))
+    Streams.phase("q231 build v1")(build(1, 4, 2))
     Streams.reindexCutover(s, root, 1)
     // the fresh v1 search feeds BOTH asserts (pre- and mid-migration):
     // materialized once inside fresh() — the un-shared spelling re-ran
     // the full corpus sign + self-join + distinct a second time
     // (guide §1.2)
-    val freshV1 = qphase("q231 fresh v1")(fresh(4, 2))
-    qphase("q231 assert pre") {
+    val freshV1 = Streams.phase("q231 fresh v1")(fresh(4, 2))
+    Streams.phase("q231 assert pre") {
       assertSame("pre-migration (v1)",
         Streams.lshServeVersioned(s, root, req), freshV1)
     }
-    qphase("q231 build v2")(build(2, 2, 4)) // v2 streams in while v1 serves
-    qphase("q231 assert mid") {
+    Streams.phase("q231 build v2")(build(2, 2, 4)) // v2 streams in while v1 serves
+    Streams.phase("q231 assert mid") {
       assertSame("mid-migration (still v1)",
         Streams.lshServeVersioned(s, root, req), freshV1)
     }
@@ -2822,11 +2678,29 @@ object StreamingQ {
        |WHERE doc_a % $ServeReqMod = $ServeReqResidue
        |   OR doc_b % $ServeReqMod = $ServeReqResidue""".stripMargin
 
+  /** q229: the q216 erasure lifecycle through the SNAPSHOT-MANIFEST
+    * layer — the atomic-commit / reader-isolation story (verdict-r14
+    * "Next round" #1) as an oracle row, not just a spec. The corpus
+    * ingests through the q107 ladder exactly as q216; then both
+    * landed artifacts get a manifest ([[Manifests.enableFromListing]])
+    * and the erasure runs as ONE [[Streams.vacuumTombstonedGroup]]:
+    * index and pair log stage fresh files next to the old and flip in
+    * a single intent-guarded group publish — a crash between the two
+    * artifacts can no longer leave them mutually inconsistent, and a
+    * reader that resolved its snapshot before the erasure keeps
+    * reading the COMPLETE pre-erasure census while the vacuum stages,
+    * commits, and even after (physical cleanup is deferred) — asserted
+    * in-row: the pre-resolved pair reader re-counts its full census
+    * AFTER the group publish. Residuals measured zero through the new
+    * snapshot. Oracle: q216Sql — the vacuumed snapshot must be
+    * indistinguishable from an index the erased docs never entered,
+    * same law as q216; green here means the manifest path changes the
+    * COMMIT protocol, not the answer. */
   def q229ManifestLifecycle(s: SparkSession, dir: String): DataFrame = {
     val work = streamed(s, dir, Seq("doc_id", "text"),
       "doc_id bigint, text string") { (docs, work) =>
       Streams.incrementalLshDedup(docs, s"$work/index", s"$work/pairs",
-        s"$work/ckpt").trigger(Trigger.AvailableNow()).start().awaitTermination()
+        s"$work/ckpt")
     }
     def hp(p: String) = new org.apache.hadoop.fs.Path(p)
     val fs = hp(work).getFileSystem(s.sparkContext.hadoopConfiguration)

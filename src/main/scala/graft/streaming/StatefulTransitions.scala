@@ -265,9 +265,11 @@ object StatefulTransitions {
   def feedStream(s: org.apache.spark.sql.SparkSession,
                  feedDir: String): Dataset[TEvent] = {
     implicit val ee = Encoders.product[TEvent]
-    s.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id bigint, ts timestamp_ltz, event_type string, event_id bigint"))
-      .option("maxFilesPerTrigger", "1").parquet(feedDir).as[TEvent]
+    Streams.fileFeed(s, FeedDdl, feedDir).as[TEvent]
   }
+
+  /** The schema [[stageOrderedFeed]] stages (and every ordered event
+    * feed replays with). */
+  val FeedDdl =
+    "user_id bigint, ts timestamp_ltz, event_type string, event_id bigint"
 }

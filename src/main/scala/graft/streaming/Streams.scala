@@ -28,11 +28,13 @@ import org.apache.spark.sql.Row
 object Streams {
 
   /** Opt-in sub-phase timing (`-Dgraft.phaseLog=1`): prints wall time
-    * of the machinery steps inside the hot helpers so lifecycle-row
-    * costs are attributable to a step, not a whole row. Dev-only; the
-    * guard is a static boolean so the disabled path costs nothing. */
-  private val PhaseLog = sys.props.get("graft.phaseLog").contains("1")
-  @inline private def phase[A](label: String)(f: => A): A =
+    * of a machinery step — inside the hot helpers here, and around the
+    * feed / stream run / vacuum / audit steps of a composed
+    * [[graft.queries.StreamingQ]] row — so lifecycle-row costs are
+    * attributable to a step, not a whole row. Dev-only; the guard is a
+    * static boolean so the disabled path costs nothing. */
+  private[graft] val PhaseLog = sys.props.get("graft.phaseLog").contains("1")
+  @inline private[graft] def phase[A](label: String)(f: => A): A =
     if (!PhaseLog) f
     else {
       val t0 = System.nanoTime(); val r = f
@@ -47,8 +49,9 @@ object Streams {
     * Only for actions with no data dependency — e.g. one micro-batch's
     * writes to DISTINCT artifact paths off already-persisted frames.
     * Failures propagate: the first exception rethrows after all tasks
-    * settle, so no write is silently abandoned mid-flight. */
-  /** Implementation: one dedicated thread per task, NOT the global
+    * settle, so no write is silently abandoned mid-flight.
+    *
+    * Implementation: one dedicated thread per task, NOT the global
     * ForkJoinPool (ADVICE-r15: pool threads snapshot Spark's
     * InheritableThreadLocal job group / local properties at POOL-thread
     * creation, so jobs submitted from a reused pool thread lose the
@@ -117,6 +120,16 @@ object Streams {
     * the reference. */
   def jsonFileSource(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.format("text").option("wholetext", "true").load(dir)
+
+  /** One-file-per-trigger parquet feed: the staged files under `dir`
+    * replay as one micro-batch each, oldest modification time first
+    * (see [[orderedChunkFeed]]), read with the explicit `ddl` schema.
+    * The replay harness every streamed oracle row and dev probe runs
+    * on. */
+  def fileFeed(session: SparkSession, ddl: String, dir: String): DataFrame =
+    session.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .option("maxFilesPerTrigger", "1").parquet(dir)
 
   /** Rate source for load/throughput experiments. */
   def rateSource(spark: SparkSession, rowsPerSecond: Int): DataFrame =
@@ -218,12 +231,9 @@ object Streams {
     * changed keys would silently delete every unchanged key's row. */
   def overwriteParquetSink(df: DataFrame, path: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(path)
-      }
+    microBatches(df, checkpoint, OutputMode.Complete()) { (batch, _) =>
+      batch.write.mode("overwrite").parquet(path)
+    }
 
   /** Console debug sink (reference K2, Consumer.scala:89 et al. —
     * `batchDF.show(1000)` per batch). numRows is capped: the
@@ -243,8 +253,9 @@ object Streams {
     * own batch_id=N partition via dynamic partition overwrite, so a
     * batch replayed after a crash-between-commit-and-checkpoint
     * OVERWRITES its own partition instead of appending duplicates —
-    * exactly-once output from an at-least-once foreachBatch. */
-  /** File-count note for the prefix-partitioned writes: every task
+    * exactly-once output from an at-least-once foreachBatch.
+    *
+    * File-count note for the prefix-partitioned writes: every task
     * writes a file into every partition dir it touches, so a batch
     * costs up to tasks × dirs small files. At production scale,
     * cluster by the prefix first (`batch.repartition(prefixCols)`) —
@@ -254,8 +265,9 @@ object Streams {
     * listing they save is negligible (≤128 files/batch) — the
     * crossover is where dirs × tasks outruns the prefix-row shuffle,
     * i.e. exactly the regime the [[FpPrefixLen]]/[[AnnBucketGroups]]
-    * grain rules push wide. */
-  /** `refCols` (when non-empty) also maintains the `_refs` vacuum-
+    * grain rules push wide.
+    *
+    * `refCols` (when non-empty) also maintains the `_refs` vacuum-
     * detection sidecar: one bloom-summary row per partition this batch
     * landed, appended AFTER the data commit (a crash in between replays
     * the batch, which re-appends the identical rows — see
@@ -362,18 +374,66 @@ object Streams {
     } finally if (needTwice) landed.unpersist()
   }
 
+  /** The one micro-batch header: a checkpointed `foreachBatch` stream
+    * whose `step` sees each micro-batch with its id. The checkpoint
+    * makes the source replayable; a step that overwrites only what
+    * its batch id keys (see [[writeBatchPartition]]) makes the sink
+    * idempotent — together, exactly-once landing. */
+  private def microBatches(rows: DataFrame, checkpoint: String,
+                           mode: OutputMode = OutputMode.Append())
+                          (step: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    rows.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(step)
+
+  /** THE way a per-batch partial lands: each micro-batch is folded and
+    * written to its own batch_id partition by [[writeBatchPartition]]
+    * (the three optional arguments are its own). Every single-landing
+    * monitor below is one call of this.
+    *
+    * The fold is also the schema-evolution hook (q228): a pipeline
+    * upgrade swaps the fold (e.g. the hourly counts gain a value_cents
+    * column) while the SAME checkpoint and landed log continue. The
+    * fold runs inside foreachBatch, so the streaming plan is just the
+    * source — changing the fold between restarts is
+    * checkpoint-compatible by construction. Older batch partitions keep
+    * the v1 schema, newer ones the v2; snapshot readers merge schemas
+    * (`option("mergeSchema", true)`) and see v1 rows with the new
+    * columns NULL — the lake-evolution contract at any scale.
+    *
+    * `zoneCols`: partial columns whose per-partition min/max land in
+    * the `_refs` zone-map sidecar as each batch commits — the
+    * detection feed for [[retentionVacuumKeyed]] (age retention is a
+    * range predicate over exactly these columns). */
+  def incrementalPartials(rows: DataFrame, path: String, checkpoint: String,
+                          prefixPartitionCols: Seq[String] = Nil,
+                          refCols: Seq[String] = Nil,
+                          zoneCols: Seq[String] = Nil)
+                         (fold: DataFrame => DataFrame): DataStreamWriter[Row] =
+    microBatches(rows, checkpoint) { (batch, batchId) =>
+      writeBatchPartition(fold(batch), batchId, path, prefixPartitionCols,
+        refCols, zoneCols)
+    }
+
+  /** Runs a stream to completion: starts it with the AvailableNow
+    * trigger (every input available now, in as many micro-batches as
+    * the source's admission limit makes, then stop), waits for it, and
+    * returns the finished query so callers can read its progress. */
+  def runToCompletion[T](w: DataStreamWriter[T]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
   /** foreachBatch append sink with batch id partition — the reference's
     * append tables carry batch_id the same way (init.sql:43,51), but
     * replay-idempotent (see writeBatchPartition). */
   def appendParquetSink(df: DataFrame, path: String, checkpoint: String,
                         refCols: Seq[String] = Nil)
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(batch, batchId, path, refCols = refCols)
-      }
+    incrementalPartials(df, path, checkpoint, refCols = refCols)(identity)
 
   /** Update-mode upsert sink: writes only the keys whose aggregate
     * changed this micro-batch, one batch_id partition per batch
@@ -382,12 +442,9 @@ object Streams {
     * batch per key (latestSnapshot below). */
   def upsertParquetSink(df: DataFrame, path: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(batch, batchId, path)
-      }
+    microBatches(df, checkpoint, OutputMode.Update()) { (batch, batchId) =>
+      writeBatchPartition(batch, batchId, path)
+    }
 
   /** Batch view reconstructing current state from an upsert log:
     * latest batch_id wins per key. */
@@ -437,26 +494,15 @@ object Streams {
     * appends its own top-10. */
   def perBatchTopK(parsed: DataFrame, path: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    parsed.transform(FoodPipeline.additivesExploded)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(FoodPipeline.topAdditiveAgg(batch), batchId, path)
-      }
+    incrementalPartials(parsed.transform(FoodPipeline.additivesExploded),
+      path, checkpoint)(FoodPipeline.topAdditiveAgg(_))
 
   /** Q7: per-batch windowed rank (reference Consumer.scala:106-124). */
   def perBatchTopSugary(parsed: DataFrame, path: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    parsed.transform(FoodPipeline.sugarsByCategory)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(graft.ops.Shapes.argmaxPerGroup(batch,
-          "main_category",
-          Seq(col("sugar").desc, col("product_name").asc)), batchId, path)
-      }
+    incrementalPartials(parsed.transform(FoodPipeline.sugarsByCategory),
+      path, checkpoint)(graft.ops.Shapes.argmaxPerGroup(_, "main_category",
+        Seq(col("sugar").desc, col("product_name").asc)))
 
   // --------------------------------------- event-time ops (beyond reference)
 
@@ -545,12 +591,8 @@ object Streams {
     * (idempotent, see writeBatchPartition). */
   def curationIngest(docs: DataFrame, outPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    curateBatch(docs).writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(batch, batchId, outPath, Seq("split"))
-      }
+    incrementalPartials(curateBatch(docs), outPath, checkpoint,
+      Seq("split"))(identity)
 
   /** Incremental count-min sketch — q68's streaming twin, and the
     * textbook justification for sketches in a pipeline: cells are
@@ -561,19 +603,16 @@ object Streams {
     * derivation is the exact batch code path (Stats.cmsCells). */
   def incrementalCms(docs: DataFrame, cellsPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tok = batch
-          .select(explode(split(col("text"), " ")).as("token"))
-          .filter(col("token") =!= "")
-        writeBatchPartition(graft.queries.Stats.cmsCells(tok), batchId, cellsPath)
-      }
+    incrementalPartials(docs, cellsPath, checkpoint) { batch =>
+      graft.queries.Stats.cmsCells(batch
+        .select(explode(split(col("text"), " ")).as("token"))
+        .filter(col("token") =!= ""))
+    }
 
   /** The live sketch: per-cell sums across all batch partitions. */
   def cmsSnapshot(spark: SparkSession, cellsPath: String): DataFrame =
-    spark.read.parquet(cellsPath)
+    readPartialsOrEmpty(spark, cellsPath,
+      "sketch_row int, bucket bigint, cell_count bigint, batch_id bigint")
       .groupBy(col("sketch_row"), col("bucket"))
       .agg(sum(col("cell_count")).as("cell_count"))
 
@@ -587,31 +626,19 @@ object Streams {
     * is O(sources × 8) regardless of ingest age. */
   def incrementalSourceSignatures(docs: DataFrame, sigsPath: String,
                                   checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Dedup.sourceSignatures(batch), batchId, sigsPath)
-      }
+    incrementalPartials(docs, sigsPath, checkpoint)(
+      graft.queries.Dedup.sourceSignatures)
 
   /** The live per-source signatures: elementwise min across batches. */
   def sourceSignatureSnapshot(spark: SparkSession, sigsPath: String): DataFrame = {
-    val mins = (0 until graft.queries.Dedup.SourceMinHashes)
-      .map(j => min(col(s"m$j")).as(s"m$j"))
-    spark.read.parquet(sigsPath)
+    val ms = 0 until graft.queries.Dedup.SourceMinHashes
+    val mins = ms.map(j => min(col(s"m$j")).as(s"m$j"))
+    readPartialsOrEmpty(spark, sigsPath,
+      ms.map(j => s"m$j bigint").mkString("source string, ", ", ",
+        ", batch_id bigint"))
       .groupBy(col("source")).agg(mins.head, mins.tail: _*)
   }
 
-  /** Incremental mixture weights — q97's streaming twin, the simplest
-    * member of the SUM-merge family: each micro-batch lands its
-    * per-source token totals (Text.sourceTokenTotals, the exact batch
-    * code path) as a batch_id partition; the live mixture is the
-    * temperature math over the summed totals. State is O(sources ×
-    * batches) tiny rows (compactable like every partitioned index
-    * here), and the snapshot's weight step is O(sources). This is the
-    * piece a streaming ingest actually wants live: sampling rates
-    * that track the corpus as feeds grow at different speeds. */
   /** Expectations-gate monitor (q202): each micro-batch of the
     * FK-flagged event feed (stream-static broadcast join upstream)
     * lands its per-(check, key) row/violation partials as a
@@ -620,14 +647,8 @@ object Streams {
     * per-batch state is O(keys), never O(rows). */
   def incrementalExpectations(flagged: DataFrame, checksPath: String,
                               checkpoint: String): DataStreamWriter[Row] =
-    flagged.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Relational.expectationPartials(batch), batchId,
-          checksPath)
-      }
+    incrementalPartials(flagged, checksPath, checkpoint)(
+      graft.queries.Relational.expectationPartials)
 
   /** The q202 census from the landed check partials: rows/violations
     * re-sum across batches; distinct_keys distincts the bounded key
@@ -649,13 +670,8 @@ object Streams {
     * texts never enter state. */
   def incrementalIntegrityRoots(docs: DataFrame, rootsPath: String,
                                 checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.PipelineQ.integrityRoots(batch), batchId, rootsPath)
-      }
+    incrementalPartials(docs, rootsPath, checkpoint)(
+      graft.queries.PipelineQ.integrityRoots)
 
   /** The corpus roots from landed per-batch partials: xor of xors IS
     * the corpus xor, and (Σ (sᵢ mod p)) mod p = (Σ sᵢ) mod p — the
@@ -678,14 +694,8 @@ object Streams {
   def incrementalContamination(docs: DataFrame, bench: Seq[String],
                                hitsPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Text.contaminationPartials(batch, bench), batchId,
-          hitsPath)
-      }
+    incrementalPartials(docs, hitsPath, checkpoint)(
+      graft.queries.Text.contaminationPartials(_, bench))
 
   /** The q49 census from landed contamination partials: counts re-sum,
     * maxima re-max — exact whatever the batch boundaries. */
@@ -711,10 +721,8 @@ object Streams {
     * same index the dedup pipeline already pays for. */
   def incrementalDatasetCard(docs: DataFrame, work: String,
                              checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(docs, checkpoint) {
+      (batch, batchId) =>
         val b = batch.persist()
         // five independent landings (distinct member paths, all off
         // the persisted batch) — overlap them (guide §2.6)
@@ -733,7 +741,7 @@ object Streams {
             s"$work/index", s"$work/pairs"))
         b.unpersist()
         ()
-      }
+    }
 
   /** The q149 card from the landed member partials: base re-sums,
     * keys and fps distinct (duplication-tolerant), near-dup members
@@ -782,16 +790,11 @@ object Streams {
   def incrementalWritePathGate(docs: DataFrame, bench: Seq[String],
                                censusPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.PipelineQ.gateCensus(
-            graft.queries.PipelineQ.gateStaged(batch)
-              .filter(col("doc_id") >= 20),
-            typedLit(bench)), batchId, censusPath)
-      }
+    incrementalPartials(docs, censusPath, checkpoint) { batch =>
+      graft.queries.PipelineQ.gateCensus(
+        graft.queries.PipelineQ.gateStaged(batch).filter(col("doc_id") >= 20),
+        typedLit(bench))
+    }
 
   /** The q208 census from landed gate partials: counts re-sum, the
     * landed commitment re-xors (nulls — batches where a source landed
@@ -819,13 +822,8 @@ object Streams {
     * thus readable mid-ingest at O(bins) cost. */
   def incrementalCalibration(docs: DataFrame, binsPath: String,
                              checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Text.calibrationPartials(batch), batchId, binsPath)
-      }
+    incrementalPartials(docs, binsPath, checkpoint)(
+      graft.queries.Text.calibrationPartials)
 
   /** The q201 reliability table from landed bin partials. */
   def calibrationSnapshot(spark: SparkSession, binsPath: String): DataFrame =
@@ -851,16 +849,12 @@ object Streams {
     * nightly OPTIMIZE rewrite of the whole table. */
   def incrementalZorder(facts: DataFrame, indexPath: String,
                         checkpoint: String): DataStreamWriter[Row] =
-    facts.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Layout.curveFrame(batch)
-            .withColumn("zdir", expr("zfile div 8"))
-            .repartition(col("zdir")),
-          batchId, indexPath, prefixPartitionCols = Seq("zdir"))
-      }
+    incrementalPartials(facts, indexPath, checkpoint,
+      prefixPartitionCols = Seq("zdir")) { batch =>
+      graft.queries.Layout.curveFrame(batch)
+        .withColumn("zdir", expr("zfile div 8"))
+        .repartition(col("zdir"))
+    }
 
   /** The q72 zone-map census over the landed curve index — bit-equal
     * to the batch census because the curve position is a pure
@@ -871,15 +865,19 @@ object Streams {
         "day bigint, o_custkey bigint, z bigint, zfile bigint, " +
           "zdir bigint, batch_id bigint"))
 
+  /** Incremental mixture weights — q97's streaming twin, the simplest
+    * member of the SUM-merge family: each micro-batch lands its
+    * per-source token totals (Text.sourceTokenTotals, the exact batch
+    * code path) as a batch_id partition; the live mixture is the
+    * temperature math over the summed totals. State is O(sources ×
+    * batches) tiny rows (compactable like every partitioned index
+    * here), and the snapshot's weight step is O(sources). This is the
+    * piece a streaming ingest actually wants live: sampling rates
+    * that track the corpus as feeds grow at different speeds. */
   def incrementalSourceTokens(docs: DataFrame, tokensPath: String,
                               checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Text.sourceTokenTotals(batch), batchId, tokensPath)
-      }
+    incrementalPartials(docs, tokensPath, checkpoint)(
+      graft.queries.Text.sourceTokenTotals)
 
   /** Read a landed-partials path, or an empty frame of the given
     * schema if no micro-batch has committed yet — monitoring callers
@@ -927,14 +925,9 @@ object Streams {
     * grows with batches × sources × k. */
   def incrementalKmv(docs: DataFrame, sketchPath: String,
                      checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          kmvMerge()(graft.queries.Stats.chunkHashesOf(batch)),
-          batchId, sketchPath)
-      }
+    incrementalPartials(docs, sketchPath, checkpoint) { batch =>
+      kmvMerge()(graft.queries.Stats.chunkHashesOf(batch))
+    }
 
   /** The live sketch: KmvAgg over the union of landed k-min partials
     * — (source, n, kth), identical to the batch kernel's output on
@@ -958,15 +951,10 @@ object Streams {
     * the column it drops). */
   def incrementalOverlapSketch(docs: DataFrame, sketchPath: String,
                                checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          kmvMerge(graft.queries.Dedup.OverlapK)(
-            graft.queries.Dedup.overlapHashesOf(batch)),
-          batchId, sketchPath)
-      }
+    incrementalPartials(docs, sketchPath, checkpoint) { batch =>
+      kmvMerge(graft.queries.Dedup.OverlapK)(
+        graft.queries.Dedup.overlapHashesOf(batch))
+    }
 
   /** The live overlap matrix: merged per-batch k-min partials through
     * q171's pairwise estimator — snapshot(union of batches) ==
@@ -998,14 +986,8 @@ object Streams {
     * differences on the oracle row. */
   def incrementalCentroids(emb: DataFrame, centPath: String,
                            checkpoint: String): DataStreamWriter[Row] =
-    emb.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Similarity.centroidPartialsOf(batch),
-          batchId, centPath)
-      }
+    incrementalPartials(emb, centPath, checkpoint)(
+      graft.queries.Similarity.centroidPartialsOf)
 
   /** The live centroid-similarity matrix: merged Σ/n through the
     * shared q110 tail. */
@@ -1027,14 +1009,9 @@ object Streams {
                                 checkpoint: String,
                                 k: Int = graft.queries.Stats.SampleK)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          quantileSampleMerge(k)(graft.queries.Stats.quantileSampleOf(batch)),
-          batchId, samplePath)
-      }
+    incrementalPartials(docs, samplePath, checkpoint) { batch =>
+      quantileSampleMerge(k)(graft.queries.Stats.quantileSampleOf(batch))
+    }
 
   /** The live quantile census: the batch census tail over the merged
     * per-batch bottom-k partials (+ the caller's exact audit frame —
@@ -1063,10 +1040,8 @@ object Streams {
   def incrementalSegmentDedup(docs: DataFrame, claimsPath: String,
                               docsPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(docs, checkpoint) {
+      (batch, batchId) =>
         // persist: the segment fan-out (explode + substring + md5, the
         // monitor's dominant cost) feeds TWO write actions — without
         // this it re-runs per landed partial (the incrementalPipeline
@@ -1079,7 +1054,7 @@ object Streams {
               sum(col("slen")).cast("long").as("chars"))
           writeBatchPartition(totals, batchId, docsPath)
         } finally { segs.unpersist(); () }
-      }
+    }
 
   /** Per-fingerprint earliest claim of a (fp, doc_id, off, source,
     * slen) frame — THE claim ordering, one definition for the
@@ -1137,10 +1112,8 @@ object Streams {
                              copiesPath: String, checkpoint: String,
                              cap: Int = graft.queries.Dedup.DupCap)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(docs, checkpoint) {
+      (batch, batchId) =>
         // fingerprint + survivor hash computed once feed both write
         // actions (the incrementalSegmentDedup persist discipline)
         val d = graft.queries.Dedup.cappedDocsOf(batch).persist()
@@ -1154,7 +1127,7 @@ object Streams {
               .agg(count(lit(1)).as("copies")),
             batchId, copiesPath)
         } finally { d.unpersist(); () }
-      }
+    }
 
   /** The capped-claims log's partial merge — per-fingerprint bottom-
     * cap by the (h, doc_id) survivor order, the SAME order the kernel
@@ -1225,14 +1198,8 @@ object Streams {
     * the distinct merge), like the capped-claims index. */
   def incrementalBudgetSelection(docs: DataFrame, scoredPath: String,
                                  checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Selection.ttrScoredOf(batch), batchId, scoredPath,
-          refCols = Seq("doc_id"))
-      }
+    incrementalPartials(docs, scoredPath, checkpoint,
+      refCols = Seq("doc_id"))(graft.queries.Selection.ttrScoredOf)
 
   /** The scored log's partial merge — rows are fully keyed, so the
     * merge is plain distinct (duplication tolerance for the in-place
@@ -1293,15 +1260,10 @@ object Streams {
     * is idempotent). */
   def incrementalFrontier(docs: DataFrame, frontierPath: String,
                           checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Selection.frontierKept(
-            graft.queries.Selection.ttrScoredOf(batch)),
-          batchId, frontierPath)
-      }
+    incrementalPartials(docs, frontierPath, checkpoint) { batch =>
+      graft.queries.Selection.frontierKept(
+        graft.queries.Selection.ttrScoredOf(batch))
+    }
 
   /** The frontier log's partial merge — distinct (rows fully doc-keyed;
     * a resurrected folded partition would otherwise present the same
@@ -1332,13 +1294,8 @@ object Streams {
     * clip bounds as feeds drift, without rescanning a byte. */
   def incrementalLengthHistogram(docs: DataFrame, histPath: String,
                                  checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Text.lengthHistogramOf(batch), batchId, histPath)
-      }
+    incrementalPartials(docs, histPath, checkpoint)(
+      graft.queries.Text.lengthHistogramOf)
 
   /** The live winsorize census: summed histogram cells through the
     * exact q88 threshold + census arithmetic —
@@ -1358,13 +1315,8 @@ object Streams {
     * rows; compaction = re-land summed cells, same as the CMS. */
   def incrementalDayTypeCells(events: DataFrame, cellsPath: String,
                               checkpoint: String): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Events.dayTypeCells(batch), batchId, cellsPath)
-      }
+    incrementalPartials(events, cellsPath, checkpoint)(
+      graft.queries.Events.dayTypeCells)
 
   /** The live drift verdicts: summed cells through the exact batch
     * χ² arithmetic — snapshot(union of batches) == q145(union
@@ -1397,13 +1349,8 @@ object Streams {
     // persist — no CacheManager entry to leak past the stream's life;
     // the materialized blocks are GC-reclaimed with the frame.
     val frozen = graft.queries.Text.frozenVocab(vocab).localCheckpoint()
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Text.oovStatsFrozen(batch, frozen), batchId, statsPath)
-      }
+    incrementalPartials(docs, statsPath, checkpoint)(
+      graft.queries.Text.oovStatsFrozen(_, frozen))
   }
 
   /** The live OOV rate: summed partials, rate in integer ppm. */
@@ -1427,13 +1374,8 @@ object Streams {
     * overwrites its own partition. */
   def incrementalLexicon(docs: DataFrame, lexPath: String,
                          checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Text.sourceLexicon(batch), batchId, lexPath)
-      }
+    incrementalPartials(docs, lexPath, checkpoint)(
+      graft.queries.Text.sourceLexicon)
 
   /** The live lexical-diversity census: merge the landed lexicon
     * partials, then the exact q108 tail —
@@ -1456,27 +1398,22 @@ object Streams {
     * the batch q91 first-seen agg, here spread across partitions. */
   def incrementalNoveltyGrams(docs: DataFrame, gramsPath: String,
                               checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val grams = batch
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= graft.queries.Dedup.SpanK)
-          .select(explode(graft.functions.NGramSetFunctions
-            .ngram_set(col("toks"), graft.queries.Dedup.SpanK)).as("gram"))
-          .groupBy(col("gram")).agg(count(lit(1)).as("occ"))
-        writeBatchPartition(grams, batchId, gramsPath)
-      }
+    incrementalPartials(docs, gramsPath, checkpoint) { batch =>
+      batch.withColumn("toks", split(col("text"), " "))
+        .filter(size(col("toks")) >= graft.queries.Dedup.SpanK)
+        .select(explode(graft.functions.NGramSetFunctions
+          .ngram_set(col("toks"), graft.queries.Dedup.SpanK)).as("gram"))
+        .groupBy(col("gram")).agg(count(lit(1)).as("occ"))
+    }
 
   /** The live novelty curve: per ingest batch, distinct grams seen,
     * gram-doc incidences, grams first seen there, the running
     * distinct total and the integer novelty pct — the q91 output
     * shape with the micro-batch AS the batch axis. */
   def noveltyCurveSnapshot(spark: SparkSession, gramsPath: String): DataFrame = {
-    // partition-column inference types batch_id as int; align with q91's long
-    val bg = spark.read.parquet(gramsPath)
-      .select(col("batch_id").cast("long").as("batch"), col("gram"), col("occ"))
+    val bg = readPartialsOrEmpty(spark, gramsPath,
+        "gram string, occ bigint, batch_id bigint")
+      .select(col("batch_id").as("batch"), col("gram"), col("occ"))
     val seen = bg.groupBy(col("batch"))
       .agg(count(lit(1)).as("grams_seen"), sum(col("occ")).as("gram_docs"))
     val news = bg.groupBy(col("gram")).agg(min(col("batch")).as("fb"))
@@ -1506,13 +1443,8 @@ object Streams {
     * q91 asymptotics, spread across partitions. */
   def incrementalNoveltyCurve(docs: DataFrame, gramsPath: String,
                               checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Dedup.noveltyGramsOf(batch), batchId, gramsPath)
-      }
+    incrementalPartials(docs, gramsPath, checkpoint)(
+      graft.queries.Dedup.noveltyGramsOf)
 
   /** The live q91 census: summed (batch, gram) partials through the
     * exact batch tail. */
@@ -1533,23 +1465,20 @@ object Streams {
     * ARRIVES — not at the next full-corpus audit. */
   def incrementalSplitGuard(docs: DataFrame, fpsPath: String,
                             checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = batch.select(
-            graft.ops.TextOps.fingerprint(col("text")).as("fp"),
-            graft.queries.Text.splitLabel(col("doc_id")).as("split"))
-          .groupBy(col("fp"), col("split")).agg(count(lit(1)).as("c"))
-        writeBatchPartition(fs, batchId, fpsPath)
-      }
+    incrementalPartials(docs, fpsPath, checkpoint) { batch =>
+      batch.select(
+          graft.ops.TextOps.fingerprint(col("text")).as("fp"),
+          graft.queries.Text.splitLabel(col("doc_id")).as("split"))
+        .groupBy(col("fp"), col("split")).agg(count(lit(1)).as("c"))
+    }
 
   /** Live leakage census: merge the per-batch (fp, split) partials,
     * then the SAME membership arithmetic as batch q93
     * (Text.leakageCensus — shared, can't drift). */
   def splitGuardSnapshot(spark: SparkSession, fpsPath: String): DataFrame =
     graft.queries.Text.leakageCensus(
-      spark.read.parquet(fpsPath)
+      readPartialsOrEmpty(spark, fpsPath,
+        "fp string, split string, c bigint, batch_id bigint")
         .groupBy(col("fp"), col("split")).agg(sum(col("c")).as("c")))
 
   /** Incremental hourly event counts — q90's streaming half and the
@@ -1559,30 +1488,6 @@ object Streams {
     * partition, replay-idempotent. Counts are mergeable, so the live
     * hourly table is a per-key sum; state is O(types·hours observed),
     * never the event log. */
-  /** Per-batch partial writer parameterized by the FOLD — the
-    * schema-evolution hook (q228): a pipeline upgrade swaps the fold
-    * (e.g. the hourly counts gain a value_cents column) while the SAME
-    * checkpoint and landed log continue. The fold runs inside
-    * foreachBatch, so the streaming plan is just the source — changing
-    * the fold between restarts is checkpoint-compatible by
-    * construction. Older batch partitions keep the v1 schema, newer
-    * ones the v2; snapshot readers merge schemas
-    * (`option("mergeSchema", true)`) and see v1 rows with the new
-    * columns NULL — the lake-evolution contract at any scale. */
-  /** `zoneCols`: partial columns whose per-partition min/max land in
-    * the `_refs` zone-map sidecar as each batch commits — the
-    * detection feed for [[retentionVacuumKeyed]] (age retention is a
-    * range predicate over exactly these columns). */
-  def incrementalPartials(rows: DataFrame, path: String, checkpoint: String,
-                          zoneCols: Seq[String] = Nil)
-                         (fold: DataFrame => DataFrame): DataStreamWriter[Row] =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(fold(batch), batchId, path, zoneCols = zoneCols)
-      }
-
   def incrementalHourlyCounts(events: DataFrame, countsPath: String,
                               checkpoint: String): DataStreamWriter[Row] =
     incrementalPartials(events, countsPath, checkpoint,
@@ -1596,7 +1501,8 @@ object Streams {
     * exactly what an ingest monitor must guarantee on replay. */
   def rateAnomalySnapshot(spark: SparkSession, countsPath: String): DataFrame =
     graft.queries.Events.anomalyVerdicts(
-      spark.read.parquet(countsPath)
+      readPartialsOrEmpty(spark, countsPath,
+        "hour_start bigint, event_type string, cnt bigint, batch_id bigint")
         .groupBy(col("hour_start"), col("event_type"))
         .agg(sum(col("cnt")).as("cnt")))
 
@@ -1629,12 +1535,10 @@ object Streams {
   def incrementalLshDedup(docs: DataFrame, indexPath: String,
                           pairsPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(docs, checkpoint) {
+      (batch, batchId) =>
         lshDedupStep(batch, batchId, indexPath, pairsPath)
-      }
+    }
 
   /** One micro-batch of the incremental LSH dedup (shared by
     * [[incrementalLshDedup]] and [[incrementalPipeline]]): sign the
@@ -1726,13 +1630,11 @@ object Streams {
                      quarantinePath: String, indexPath: String,
                      pairsPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(docs, checkpoint) {
+      (batch, batchId) =>
         gatedAdmissionStep(batch, batchId, corpusPath, quarantinePath,
           indexPath, pairsPath)
-      }
+    }
 
   /** One micro-batch of [[gatedLshIngest]] — package-visible so the
     * spec drives single batches and asserts the probe's plan. */
@@ -1796,6 +1698,18 @@ object Streams {
     ()
   }
 
+  /** Partition-directory grain of the incremental ANN index: buckets
+    * are stored under `bucket_grp = bucket % AnnBucketGroups` dirs, NOT
+    * one dir per bucket — 2^planes directories per micro-batch (256 at
+    * 8 planes, 65k at 16) would drown the index in tiny files and make
+    * every history read's partition discovery O(batches × buckets).
+    * Groups keep the directory count bounded while the history read
+    * stays pruned: partition filters on the touched GROUPS, then
+    * parquet row-group min/max stats on the `bucket` data column inside
+    * them. At 100 TB, size this so a group partition meets the file-
+    * size target (the same rule that picks a table's partition key). */
+  val AnnBucketGroups = 16
+
   /** Incremental hyperplane-LSH ANN near-dup detection against a
     * persistent bucket index — the ingest-side twin of batch q31
     * (graft.queries.Similarity.q31EmbeddingNearDups), completing
@@ -1821,26 +1735,12 @@ object Streams {
     * vectors. [[compactLshIndex]] folds batch partitions for this
     * index too (bandCols = Seq("bucket_grp")).
     */
-  /** Partition-directory grain of the incremental ANN index: buckets
-    * are stored under `bucket_grp = bucket % AnnBucketGroups` dirs, NOT
-    * one dir per bucket — 2^planes directories per micro-batch (256 at
-    * 8 planes, 65k at 16) would drown the index in tiny files and make
-    * every history read's partition discovery O(batches × buckets).
-    * Groups keep the directory count bounded while the history read
-    * stays pruned: partition filters on the touched GROUPS, then
-    * parquet row-group min/max stats on the `bucket` data column inside
-    * them. At 100 TB, size this so a group partition meets the file-
-    * size target (the same rule that picks a table's partition key). */
-  val AnnBucketGroups = 16
-
   def incrementalAnnNearDups(emb: DataFrame, indexPath: String,
                              pairsPath: String, checkpoint: String,
                              minCosine: Double = 0.35)
       : DataStreamWriter[Row] =
-    emb.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(emb, checkpoint) {
+      (batch, batchId) =>
         import graft.queries.Similarity.cosine
         val spark = batch.sparkSession
         val coded = batch
@@ -1889,7 +1789,7 @@ object Streams {
             refCols = Seq("vec_id")))
         coded.unpersist()
         ()
-      }
+    }
 
   /** The per-batch history read of the incremental ANN index: literal
     * bucket-GROUP isin → parquet PartitionFilters (≤ [[AnnBucketGroups]]
@@ -2039,15 +1939,9 @@ object Streams {
     writeGeom(buildDir.getFileSystem(
       docs.sparkSession.sparkContext.hadoopConfiguration), buildDir,
       bands, rows)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(
-          graft.queries.Dedup.bandedSignaturesGeom(batch, bands, rows),
-          batchId, buildDir.toString,
-          prefixPartitionCols = Seq("band"), refCols = Seq("doc_id"))
-      }
+    incrementalPartials(docs, buildDir.toString, checkpoint,
+      prefixPartitionCols = Seq("band"), refCols = Seq("doc_id"))(
+      graft.queries.Dedup.bandedSignaturesGeom(_, bands, rows))
   }
 
   /** The CUTOVER: one atomic manifest publish makes `buildId` the
@@ -2146,6 +2040,21 @@ object Streams {
 
   // ---------------------------------- the composed pipeline, incrementally
 
+  /** Partition-directory grain of the fingerprint index: 1 hex char =
+    * 16 dirs per micro-batch. Round 9 defended the 2-hex/256-dir grain
+    * in prose ("an fp index at ingest scale fills them"); round 10's
+    * first actual bench falsified it at test scale — 256 dirs × tasks
+    * per batch meant thousands of tiny files and an O(batches × dirs)
+    * partition discovery on every history read, ~30 s/run for q159
+    * where the streaming-family norm is ≤4 s (the q152 ANN-index
+    * lesson, fingerprint edition). Exact-dedup pruning does not need
+    * partition dirs that narrow: the prefix partition filter prunes
+    * 16×, and parquet row-group min/max stats on the sorted-ish `fp`
+    * data column prune inside a dir. At a true 100 TB ingest, where
+    * every batch genuinely fills 256+ prefixes with file-sized
+    * output, widen by the same file-size rule as [[AnnBucketGroups]]. */
+  val FpPrefixLen = 1
+
   /** The q50 training-data pipeline's INGEST HALF, incrementally —
     * per micro-batch of raw (source, doc_id, text, n_chars) documents:
     *  1. quality triage (THE q22/q50 predicate — batch/stream duality);
@@ -2176,29 +2085,12 @@ object Streams {
     * first-arrival is the only semantics an index-append pipeline can
     * offer without rewriting history.
     */
-  /** Partition-directory grain of the fingerprint index: 1 hex char =
-    * 16 dirs per micro-batch. Round 9 defended the 2-hex/256-dir grain
-    * in prose ("an fp index at ingest scale fills them"); round 10's
-    * first actual bench falsified it at test scale — 256 dirs × tasks
-    * per batch meant thousands of tiny files and an O(batches × dirs)
-    * partition discovery on every history read, ~30 s/run for q159
-    * where the streaming-family norm is ≤4 s (the q152 ANN-index
-    * lesson, fingerprint edition). Exact-dedup pruning does not need
-    * partition dirs that narrow: the prefix partition filter prunes
-    * 16×, and parquet row-group min/max stats on the sorted-ish `fp`
-    * data column prune inside a dir. At a true 100 TB ingest, where
-    * every batch genuinely fills 256+ prefixes with file-sized
-    * output, widen by the same file-size rule as [[AnnBucketGroups]]. */
-  val FpPrefixLen = 1
-
   def incrementalPipeline(docs: DataFrame, fpIndexPath: String,
                           survivorsPath: String, lshIndexPath: String,
                           pairsPath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(docs, checkpoint) {
+      (batch, batchId) =>
         import graft.ops.TextOps
         val spark = batch.sparkSession
         val quality = batch
@@ -2239,7 +2131,7 @@ object Streams {
         survivors.unpersist()
         quality.unpersist()
         ()
-      }
+    }
 
   /** The fingerprint-index history read — literal fp_prefix isin →
     * parquet PartitionFilters; current batch excluded (replay must not
