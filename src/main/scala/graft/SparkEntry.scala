@@ -316,7 +316,7 @@ object SparkEntry {
     // the min-merge streamed twin: landed per-batch bottom-k partials
     // must reproduce batch q155 bit-exact
     "q156_incremental_quantiles" -> (StreamingQ.q156IncrementalQuantiles _),
-    // q156 with the partials log FOLDED (in-place min-merge compaction)
+    // q156 with the partials log FOLDED (min-merge compaction)
     // between ingest and snapshot — compaction must preserve the sketch
     "q157_compacted_quantiles" -> (StreamingQ.q157CompactedQuantiles _),
     // q105 with the SUM-merge token log compacted via the atomic

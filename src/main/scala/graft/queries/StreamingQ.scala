@@ -1567,8 +1567,8 @@ object StreamingQ {
   /** q157: q156's sampled-quantile census with the partials log
     * COMPACTED between ingest and snapshot — the micro-batches' landed
     * bottom-k partitions are folded into one merged batch_id=-1
-    * partition (min-merge in-place protocol, the duplication-tolerant
-    * family) before the same snapshot runs. Oracle: q155Sql — a green
+    * partition (min-merge, through the one staged commit every fold
+    * uses) before the same snapshot runs. Oracle: q155Sql — a green
     * row means compaction preserved the sketch BIT-EXACTLY; this is
     * the maintenance operation that keeps a long-running monitor's
     * partial count O(1) instead of O(ingest age). */
@@ -1585,10 +1585,10 @@ object StreamingQ {
   }
 
   /** q158: q105's mixture weights with the SUM-merge token log
-    * compacted through the stage-and-swap protocol (the family where
-    * an in-place fold could double-count under a crash) before the
-    * same snapshot runs. Oracle: q97Sql — a green row means the
-    * all-or-nothing swap preserved the summed totals exactly. */
+    * compacted through the all-or-nothing staged commit (the family
+    * where a half-applied fold would double-count) before the same
+    * snapshot runs. Oracle: q97Sql — a green row means the fold
+    * preserved the summed totals exactly. */
   def q158CompactedMixture(s: SparkSession, dir: String): DataFrame = {
     val work = streamed(s, dir, Seq("source", "text"),
       "source string, text string") { (docs, work) =>
@@ -1748,9 +1748,9 @@ object StreamingQ {
     * maintenance cycle on the LAYOUT index: half the facts ingest in
     * 2 micro-batches, [[Streams.compactZorderIndex]] folds the landed
     * (zdir, batch_id) partitions into one merged batch_id=-1 file per
-    * zdir — through the all-or-nothing staged swap, because index
-    * rows are FACTS and an in-place fold could double-count them
-    * under a crash — and the second half resumes from the same
+    * zdir — through the all-or-nothing staged commit, because index
+    * rows are FACTS and a half-applied fold would double-count them
+    * — and the second half resumes from the same
     * checkpoint onto the folded index. Oracle: q72Sql — the zone-map
     * census over the compacted index must be bit-equal to never
     * having compacted; StreamsSpec proves the fold's payoff (one

@@ -41,9 +41,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    artifact finishes both renames). Readers never participate in
   *    recovery — they only ever see final manifest files.
   *  - Artifacts WITHOUT a manifest behave exactly as before (directory
-  *    listing); [[read]] falls back, mutators keep their legacy
-  *    staged-swap protocol. Enablement is one [[enableFromListing]]
-  *    call on a quiesced artifact.
+  *    listing); [[read]] falls back, and mutators commit through
+  *    `Streams.commitRewrites`' staged swap instead of a publish
+  *    (`Streams.readLanded` is the reader that also sees through a
+  *    crashed swap). Enablement is one [[enableFromListing]] call on a
+  *    quiesced artifact.
   */
 object Manifests {
   /** Manifest directory inside the artifact root (underscore-hidden
@@ -75,7 +77,7 @@ object Manifests {
   def resolveFiles(fs: FileSystem, root: Path): Option[Seq[String]] =
     latestVersion(fs, root).map(v => readLines(fs, finalPath(root, v)))
 
-  private def readLines(fs: FileSystem, p: Path): Seq[String] = {
+  private[streaming] def readLines(fs: FileSystem, p: Path): Seq[String] = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8")
       .getLines().filter(_.nonEmpty).toList

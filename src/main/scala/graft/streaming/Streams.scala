@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Streaming wiring: sources, per-query sinks/checkpoints, and the
   * reference's six concurrently-running aggregation queries
@@ -451,7 +452,7 @@ object Streams {
   def latestSnapshot(spark: SparkSession, path: String, keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("batch_id").desc)
-    Manifests.read(spark, path) // snapshot-pinned when enabled
+    readLanded(spark, path) // snapshot-pinned when enabled
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "batch_id")
@@ -887,21 +888,16 @@ object Streams {
                                   ddl: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a missing log may be a compaction swap interrupted between its
-    // two commit renames — repair it rather than report "no partials
-    // yet" (which would be a silently-empty WRONG snapshot)
-    if (!fs.exists(p)) recoverCompaction(spark, path)
     // read with the EXPLICIT schema, never inference: a monitor whose
     // every batch landed an empty partial (e.g. all rows filtered by a
     // validity predicate) leaves a footer-less log that inference dies
     // on (UNABLE_TO_INFER_SCHEMA) — the finalizePipeline lesson, made
     // structural for the whole snapshot family; it also drops the
-    // footer-read from every poll
-    if (fs.exists(p)) spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    // footer-read from every poll. [[readLanded]]: a log caught
+    // mid-commit reads as committed, never silently short.
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    if (fs.exists(p)) readLanded(spark, path, Some(schema))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
   /** The live mixture: summed totals through the exact batch weight
@@ -1141,12 +1137,11 @@ object Streams {
     // project to the claim key THEN distinct (claim rows are fully
     // keyed by (fp,h,doc_id,source); the snapshot hands this merge the
     // raw log WITH batch_id, under which a merged copy and a
-    // resurrected folded row are distinct): this log folds through the
-    // in-place min-merge protocol, whose crash-safety contract is
-    // duplication TOLERANCE — a folded batch partition resurrected
-    // next to its merged copy re-presents its rows, and without the
-    // distinct each duplicate would take a row_number slot and evict a
-    // true bottom-cap survivor (kmvMerge already does this via the
+    // resurrected folded row are distinct): the min-merge family's
+    // contract is duplication TOLERANCE — a folded batch partition
+    // resurrected next to its merged copy re-presents its rows, and
+    // without the distinct each duplicate would take a row_number slot
+    // and evict a true bottom-cap survivor (kmvMerge already does this via the
     // snapshot's pre-select; the claims merge owns its projection).
     df.select(col("fp"), col("h"), col("doc_id"), col("source")).distinct()
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= cap)
@@ -1194,16 +1189,16 @@ object Streams {
     * Rows are fully keyed by doc_id (each doc arrives in exactly one
     * batch; a replayed batch overwrites its own partition), so the
     * log is duplication-TOLERANT under `distinct()` and folds through
-    * the in-place min-merge protocol ([[compactMinMergePartials]] with
-    * the distinct merge), like the capped-claims index. */
+    * [[compactMinMergePartials]] with the distinct merge, like the
+    * capped-claims index. */
   def incrementalBudgetSelection(docs: DataFrame, scoredPath: String,
                                  checkpoint: String): DataStreamWriter[Row] =
     incrementalPartials(docs, scoredPath, checkpoint,
       refCols = Seq("doc_id"))(graft.queries.Selection.ttrScoredOf)
 
   /** The scored log's partial merge — rows are fully keyed, so the
-    * merge is plain distinct (duplication tolerance for the in-place
-    * fold protocol; see [[incrementalBudgetSelection]]). */
+    * merge is plain distinct (duplication tolerance; see
+    * [[incrementalBudgetSelection]]). */
   def budgetScoredMerge(df: DataFrame): DataFrame = df.distinct()
 
   /** The live budget census: the merged scored manifest through the
@@ -1799,7 +1794,7 @@ object Streams {
     * assert the plan of the EXACT read the ingest path performs. */
   def annIndexHistory(spark: SparkSession, indexPath: String,
                       buckets: Seq[Long], excludeBatchId: Long): DataFrame =
-    spark.read.parquet(indexPath)
+    readLanded(spark, indexPath)
       .filter(col("bucket_grp")
           .isin(buckets.map(b => math.floorMod(b, AnnBucketGroups.toLong))
             .distinct: _*) &&
@@ -1816,7 +1811,7 @@ object Streams {
     * so the spec asserts the plan of the EXACT read q224 performs. */
   private[streaming] def annServeRead(spark: SparkSession, indexPath: String,
                                       buckets: Seq[Long]): DataFrame =
-    Manifests.read(spark, indexPath) // snapshot-pinned when enabled
+    readLanded(spark, indexPath) // snapshot-pinned when enabled
       .filter(col("bucket_grp")
           .isin(buckets.map(b => math.floorMod(b, AnnBucketGroups.toLong))
             .distinct: _*) &&
@@ -1870,7 +1865,7 @@ object Streams {
   private[streaming] def lshServeRead(spark: SparkSession, indexPath: String,
                                       bands: Seq[Int], sigs: Seq[String])
       : DataFrame =
-    Manifests.read(spark, indexPath) // snapshot-pinned when enabled
+    readLanded(spark, indexPath) // snapshot-pinned when enabled
       .filter(col("band").isin(bands: _*) && col("sig").isin(sigs: _*))
 
   /** Dedup-at-ADMISSION serving against the landed LSH index (q225):
@@ -2035,7 +2030,7 @@ object Streams {
     * assert the plan of the EXACT read the ingest path performs. */
   def lshIndexHistory(spark: SparkSession, indexPath: String,
                       bands: Seq[Int], excludeBatchId: Long): DataFrame =
-    spark.read.parquet(indexPath)
+    readLanded(spark, indexPath)
       .filter(col("band").isin(bands: _*) && col("batch_id") =!= excludeBatchId)
 
   // ---------------------------------- the composed pipeline, incrementally
@@ -2138,7 +2133,7 @@ object Streams {
     * drop its own survivors). */
   def fpIndexHistory(spark: SparkSession, fpIndexPath: String,
                      prefixes: Seq[String], excludeBatchId: Long): DataFrame =
-    spark.read.parquet(fpIndexPath)
+    readLanded(spark, fpIndexPath)
       .filter(col("fp_prefix").isin(prefixes: _*) &&
         col("batch_id") =!= excludeBatchId)
       .select(col("fp"))
@@ -2153,13 +2148,13 @@ object Streams {
   def finalizePipeline(spark: SparkSession, survivorsPath: String,
                        pairsPath: String): DataFrame = {
     import graft.queries.{Dedup, Text}
-    val docs = spark.read.parquet(survivorsPath)
+    val docs = readLanded(spark, survivorsPath)
     // a corpus with no LSH collisions writes ONLY empty per-batch
     // candidate partitions (no parquet footers at all), which
     // spark.read cannot infer a schema from — that is the cleanest
     // possible corpus, not an error: finalize with zero pairs
     val pairs = (try {
-        val df = spark.read.parquet(pairsPath)
+        val df = readLanded(spark, pairsPath)
         df.schema // schema inference is lazy — force it inside the try
         df
       } catch {
@@ -2177,135 +2172,69 @@ object Streams {
       size(graft.ops.TextOps.tokens(col("text"))).cast("long").as("n_toks")))
   }
 
-  /** Folds the incremental index's accumulated per-batch partitions
-    * into one merged batch_id=-1 partition per band, so steady-state
-    * ingest reads O(bands) consolidated partitions instead of
-    * O(ingest age) small files. The LATEST batch partition is kept
-    * live — it is the only one a crash-recovery replay can rewrite;
-    * everything older is immutable and safe to fold. Idempotent
-    * (re-folding includes the previous merged partition), and safe to
-    * crash mid-way: a batch partition that outlives its merged copy
-    * only duplicates signature rows, which at worst re-emit candidate
-    * pairs that the per-batch distinct() already collapses.
-    *
-    * The merged frame is localCheckpoint()ed before the write — the
-    * write overwrites partitions of the same path it reads, which the
-    * file sink (correctly) refuses inside one plan. At a 100 TB index
-    * the same fold runs as a staging-dir write + atomic rename per
-    * band partition; the logic is otherwise unchanged.
-    */
+  /** Folds the incremental LSH index's accumulated per-batch
+    * partitions into one merged batch_id=-1 partition per band, so
+    * steady-state ingest reads O(bands) consolidated partitions instead
+    * of O(ingest age) small files: [[compactPartials]] with the band
+    * columns as the prefix and `distinct` as the merge. */
   def compactLshIndex(spark: SparkSession, indexPath: String,
-                      bandCols: Seq[String] = Seq("band")): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manifest-enabled index: repair + physical cleanup BEFORE listing
-    if (Manifests.isEnabled(fs, root)) {
-      Manifests.recoverGroup(fs, root)
-      Manifests.cleanupUnreferenced(fs, root)
-    }
-    val idx = spark.read.parquet(indexPath)
-    val batchIds = idx.select(col("batch_id")).distinct()
-      .collect().map(_.get(0).toString.toLong)
-    val latest = batchIds.max
-    val foldable = batchIds.filter(b => b != latest && b != -1L)
-    if (foldable.isEmpty) return
-    val merged = idx.filter(col("batch_id") =!= latest)
-      .drop("batch_id").distinct()
-      .localCheckpoint(true)
-    // manifest mode: the merged partition lands as FRESH files (the
-    // in-place dynamic overwrite below would replace batch_id=-1 files
-    // a published snapshot still references); the publish keeps the
-    // latest batch's files and swaps everything older for the merge
-    if (Manifests.isEnabled(fs, root)) {
-      val newFiles = stageNewFiles(spark, root, fs,
-        merged.withColumn("batch_id", lit(-1L)), bandCols :+ "batch_id")
-      val keep = Manifests.resolveFiles(fs, root).get
-        .filter(_.contains(s"batch_id=$latest/"))
-      Manifests.commitGroup(fs, Seq((root, keep ++ newFiles)))
-      refsFoldBatches(spark, indexPath, bandCols, latest)
-      return
-    }
-    merged.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(bandCols :+ "batch_id": _*)
-      .parquet(indexPath)
-    fs.listStatus(root).filter(s => s.isDirectory &&
-        s.getPath.getName.contains("=")).foreach { bandDir =>
-      foldable.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(bandDir.getPath, s"batch_id=$b"), true)
-      }
-    }
-    refsFoldBatches(spark, indexPath, bandCols, latest)
-  }
+                      bandCols: Seq[String] = Seq("band")): Unit =
+    compactPartials(spark, indexPath, _.distinct(), bandCols)
 
   // ------------------------------------------- partials-log compaction
 
   /** Folds a partials log's accumulated `batch_id=` partitions into one
-    * merged `batch_id=-1` partition, keeping the LATEST batch partition
-    * live — it is the only one a crash-recovery replay can rewrite;
-    * everything older is immutable and safe to fold. `merge` is the
-    * family's OWN partial merge (the same function the snapshot applies
-    * to the union of partials), so snapshot(compacted) ==
-    * snapshot(raw) by the merge's associativity; steady-state snapshot
-    * reads then see O(1) consolidated partitions instead of O(ingest
-    * age) small files. Idempotent: re-folding includes the previous
-    * merged partition.
-    *
-    * This IN-PLACE protocol (merged write, then folded deletes —
-    * [[compactLshIndex]]'s discipline, partial-log edition) is only
-    * safe for DUPLICATION-TOLERANT merges: min / bottom-k / distinct
-    * families, where a batch partition that survives a crash alongside
-    * its merged copy merely duplicates rows the next merge collapses
-    * (min of a duplicate is the same min). A SUM family double-counts
-    * under exactly that crash — fold those with
-    * [[compactSummedPartials]]' all-or-nothing swap instead. */
-  def compactMinMergePartials(spark: SparkSession, path: String,
-                              merge: DataFrame => DataFrame): Unit = {
-    // poll-safe before the first commit (the readPartialsOrEmpty
-    // contract, maintenance edition): a fold scheduled ahead of the
-    // monitor's first batch is a no-op, not an AnalysisException
-    val root0 = new org.apache.hadoop.fs.Path(path)
-    val fs0 = root0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs0.exists(root0)) return
-    if (Manifests.isEnabled(fs0, root0)) {
-      Manifests.recoverGroup(fs0, root0)
-      Manifests.cleanupUnreferenced(fs0, root0)
-    }
-    val idx = spark.read.parquet(path)
-    val batchIds = idx.select(col("batch_id")).distinct()
-      .collect().map(_.get(0).toString.toLong)
-    val latest = batchIds.max
-    val foldable = batchIds.filter(b => b != latest && b != -1L)
-    if (foldable.isEmpty) return
-    // localCheckpoint: the write below overwrites partitions of the
-    // same path it reads, which the file sink (correctly) refuses
-    // inside one plan
-    val merged = merge(idx.filter(col("batch_id") =!= latest)
-      .drop("batch_id")).localCheckpoint(true)
-    // manifest mode: fresh-file staging + one publish instead of the
-    // in-place -1 overwrite (see [[compactLshIndex]]'s branch)
-    if (Manifests.isEnabled(fs0, root0)) {
-      val newFiles = stageNewFiles(spark, root0, fs0,
-        merged.withColumn("batch_id", lit(-1L)), Seq("batch_id"))
-      val keep = Manifests.resolveFiles(fs0, root0).get
-        .filter(_.contains(s"batch_id=$latest/"))
-      Manifests.commitGroup(fs0, Seq((root0, keep ++ newFiles)))
-      refsFoldBatches(spark, path, Nil, latest)
-      return
-    }
-    merged.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
-    val root = new org.apache.hadoop.fs.Path(path)
+    * merged `batch_id=-1` partition (one per prefix directory when
+    * `prefixCols` partition the log), keeping the LATEST batch
+    * partition live — it is the only one a crash-recovery replay can
+    * rewrite; everything older is immutable and safe to fold. `merge`
+    * is the family's OWN partial merge (the same function the snapshot
+    * applies to the union of partials), so snapshot(compacted) ==
+    * snapshot(raw) by the merge's associativity. The folded partitions
+    * and the previous merged one are replaced all-or-nothing through
+    * [[commitRewrites]], so SUM families fold as safely as min /
+    * bottom-k / distinct ones, and the `_refs` sidecar folds in the
+    * same commit ([[refsFolded]]). Steady-state snapshot reads then see
+    * O(1) consolidated partitions per prefix instead of O(ingest age)
+    * small files. Idempotent (re-folding includes the previous merged
+    * partition), and a no-op on a log with no row landed yet: never
+    * written, or every batch empty. */
+  private def compactPartials(spark: SparkSession, path: String,
+                              merge: DataFrame => DataFrame,
+                              prefixCols: Seq[String] = Nil): Unit = {
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    foldable.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"batch_id=$b"), true)
+    if (!enter(fs, root)) return
+    // every landed partition with its batch id, from the directory
+    // names (FS metadata, no Spark job); a batch that landed no row has
+    // no directory, so an all-empty log lists nothing
+    val landed = partitionLeafDirs(fs, root).map { leaf =>
+      relPath(root, leaf) -> leaf.getName.stripPrefix("batch_id=").toLong
     }
-    refsFoldBatches(spark, path, Nil, latest)
+    if (landed.isEmpty) return
+    val latest = landed.map(_._2).max
+    if (!landed.exists { case (_, b) => b != latest && b != -1L }) return
+    // the stage is a different directory from the one read, so the
+    // merge streams straight into it — nothing to materialize first
+    val merged = merge(spark.read.parquet(path)
+        .filter(col("batch_id") =!= latest).drop("batch_id"))
+      .withColumn("batch_id", lit(-1L))
+    commitRewrites(spark, Seq(Rewrite(path, merged, prefixCols :+ "batch_id",
+      landed.collect { case (d, b) if b != latest => d },
+      refsFolded(spark, path, prefixCols, latest))))
   }
+
+  /** [[compactPartials]] under its two public names: one fold, whatever
+    * the merge (min / bottom-k / distinct, or a SUM); the prefix
+    * columns are the only difference in what each exposes. */
+  def compactMinMergePartials(spark: SparkSession, path: String,
+                              merge: DataFrame => DataFrame): Unit =
+    compactPartials(spark, path, merge)
+
+  def compactSummedPartials(spark: SparkSession, path: String,
+                            merge: DataFrame => DataFrame,
+                            prefixCols: Seq[String] = Nil): Unit =
+    compactPartials(spark, path, merge, prefixCols)
 
   /** The quantile sample log's partial merge — per-source bottom-k
     * over (h, v) pairs; bottom-k-of-union = bottom-k of merged
@@ -2330,150 +2259,248 @@ object Streams {
       .select(col("source"), col("h"))
   }
 
-  private val CompactStageSuffix = ".graft_compact_stage"
-  private val CompactOldSuffix = ".graft_compact_old"
-  private val StageCompleteMarker = "_GRAFT_STAGE_COMPLETE"
-
-  /** All-or-nothing compaction for SUM-merge partial logs (mixture
-    * token totals, OOV stats, CMS / contingency cells, hourly counts):
-    * the in-place protocol above would DOUBLE-COUNT if a crash landed
-    * between the merged write and the folded deletes, so the new
-    * layout — merged `batch_id=-1` plus the live latest partition,
-    * copied raw — is first fully staged in a sibling directory and
-    * then committed by directory swap:
-    *
-    *   1. write stage (next to the log), then its completion marker;
-    *   2. rename log → log.old;
-    *   3. rename stage → log;
-    *   4. delete log.old.
-    *
-    * Every crash point is unambiguous: before (2) the raw log is
-    * untouched (a stale stage is deleted on the next attempt); between
-    * (2) and (3) [[recoverCompaction]] rolls FORWARD iff the stage
-    * marker exists (the stage is a complete, correct layout) and BACK
-    * to the raw log otherwise; after (3) only a leftover .old needs
-    * deleting. The snapshot read path ([[readPartialsOrEmpty]]) runs
-    * the same recovery, so a monitor polling after a mid-swap crash
-    * repairs the log instead of silently reading an empty frame.
-    * Rename-atomicity note: directory rename is atomic on HDFS and
-    * POSIX; on an object store back this with the store's equivalent
-    * (e.g. a manifest pointer swap) — the crash-point analysis is the
-    * same. */
-  def compactSummedPartials(spark: SparkSession, path: String,
-                            merge: DataFrame => DataFrame,
-                            prefixCols: Seq[String] = Nil): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    recoverCompaction(spark, path)
-    val stage = new org.apache.hadoop.fs.Path(path + CompactStageSuffix)
-    val old = new org.apache.hadoop.fs.Path(path + CompactOldSuffix)
-    fs.delete(stage, true) // a stale stage from an earlier mid-stage crash
-    fs.delete(old, true)
-    if (!fs.exists(root)) return // poll-safe before the first commit
-    // manifest-enabled logs: repair + physical cleanup BEFORE the read
-    // below lists directories, so the fold's input is the snapshot
-    if (Manifests.isEnabled(fs, root)) {
-      Manifests.recoverGroup(fs, root)
-      Manifests.cleanupUnreferenced(fs, root)
-    }
-    val idx = spark.read.parquet(path)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-    val batchIds = idx.select(col("batch_id")).distinct()
-      .collect().map(_.get(0).toString.toLong)
-    val latest = batchIds.max
-    val foldable = batchIds.filter(b => b != latest && b != -1L)
-    if (foldable.isEmpty) return
-    // Manifest mode replaces the whole-root rename swap with the
-    // no-move protocol: the folded content lands as fresh files next
-    // to the old ones, ONE manifest publish (content = the new files
-    // only — compaction rewrites the whole artifact) flips readers,
-    // the sidecar folds in place, old files reap at the next entry.
-    // Mid-flight readers keep their resolved snapshot throughout —
-    // the isolation the rename swap could never give them.
-    if (Manifests.isEnabled(fs, root)) {
-      val content = merge(idx.filter(col("batch_id") =!= latest)
-          .drop("batch_id"))
-        .withColumn("batch_id", lit(-1L))
-        .unionByName(idx.filter(col("batch_id") === latest))
-      val newFiles = stageNewFiles(spark, root, fs, content,
-        prefixCols :+ "batch_id")
-      Manifests.commitGroup(fs, Seq((root, newFiles)))
-      refsFoldBatches(spark, path, prefixCols, latest)
-      return
-    }
-    merge(idx.filter(col("batch_id") =!= latest).drop("batch_id"))
-      .withColumn("batch_id", lit(-1L))
-      .unionByName(idx.filter(col("batch_id") === latest))
-      .write.mode("overwrite")
-      .partitionBy(prefixCols :+ "batch_id": _*)
-      .parquet(stage.toString)
-    fs.create(new org.apache.hadoop.fs.Path(stage, StageCompleteMarker)).close()
-    require(fs.rename(root, old),
-      s"compactSummedPartials: cannot rename $root aside — aborting " +
-        "before commit; the raw log is untouched")
-    require(fs.rename(stage, root),
-      s"compactSummedPartials: commit rename $stage -> $root failed; " +
-        s"recoverCompaction will roll forward from the completed stage")
-    // the `_refs` sidecar rode aside with the old root (the stage was
-    // written fresh, without it): restore it, then fold its rows to
-    // match the folded batch partitions. A crash before the restore
-    // loses the sidecar — detection falls back to the legacy full
-    // scan, conservative, never a false negative.
-    val oldRefs = new org.apache.hadoop.fs.Path(old, RefsDir)
-    if (fs.exists(oldRefs)) {
-      fs.rename(oldRefs, new org.apache.hadoop.fs.Path(root, RefsDir))
-      refsFoldBatches(spark, path, prefixCols, latest)
-    }
-    fs.delete(old, true)
-  }
-
-  /** Repairs a partials log caught mid-[[compactSummedPartials]] swap.
-    * No-op when the log directory exists. Called by the compactor and
-    * by [[readPartialsOrEmpty]] (the snapshot path) so a crash between
-    * the two commit renames can never present as "no partials yet". */
-  private def recoverCompaction(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    if (fs.exists(root)) return
-    val stage = new org.apache.hadoop.fs.Path(path + CompactStageSuffix)
-    val old = new org.apache.hadoop.fs.Path(path + CompactOldSuffix)
-    val stageComplete = fs.exists(
-      new org.apache.hadoop.fs.Path(stage, StageCompleteMarker))
-    if (stageComplete) { // crashed between the two commit renames
-      require(fs.rename(stage, root),
-        s"recoverCompaction: roll-forward rename $stage -> $root failed")
-      fs.delete(old, true)
-    } else if (fs.exists(old)) { // crashed before the stage completed
-      require(fs.rename(old, root),
-        s"recoverCompaction: roll-back rename $old -> $root failed")
-      fs.delete(stage, true)
-    } else fs.delete(stage, true) // incomplete stage, nothing to restore
-  }
-
-  /** Z-order index compaction (q215): folds the curve index's
-    * accumulated per-batch partitions into one merged batch_id=-1
-    * partition PER zdir — one consolidated file per curve directory —
-    * keeping the LATEST batch partition live (the only one a
-    * crash-recovery replay can rewrite). The index rows are FACTS, so
-    * this is the duplication-INTOLERANT family: a crash that left a
-    * batch partition alive next to its merged copy would double-count
-    * the census — hence [[compactSummedPartials]]' all-or-nothing
-    * staged directory swap, with the zdir prefix preserved in the
-    * staged layout so directory pruning survives the fold. The merge
-    * is row identity clustered back to one file per zdir (the
-    * repartition moves already-landed index rows, never the source
-    * table). Steady-state reads then list O(zdirs) consolidated files
-    * + the live batch instead of O(ingest age × zdirs) fragments. */
+  /** Z-order index compaction (q215): [[compactPartials]] with the zdir
+    * prefix kept in the layout, so directory pruning survives the
+    * fold. The index rows are FACTS (the duplication-intolerant
+    * family), so the merge is row identity, clustered back to one file
+    * per zdir (the repartition moves already-landed index rows, never
+    * the source table). Steady-state reads then list O(zdirs)
+    * consolidated files + the live batch instead of O(ingest age ×
+    * zdirs) fragments. */
   def compactZorderIndex(spark: SparkSession, indexPath: String): Unit =
-    compactSummedPartials(spark, indexPath,
-      _.repartition(col("zdir")), prefixCols = Seq("zdir"))
+    compactPartials(spark, indexPath, _.repartition(col("zdir")), Seq("zdir"))
+
+  // ------------------------------------------------------ the staged commit
+
+  private val StageDir = ".graft_stage"
+  private val OldDir = ".graft_old"
+  private val CommitMarker = ".graft_commit"
+  private val MarkerTmp = ".graft_commit.tmp"
+  private val ManifestStageDir = ".graft_mstage"
+
+  /** One artifact's rewrite: `kept`, partitioned by `partCols`, becomes
+    * the whole content of the root-relative partition dirs `dirs` (a
+    * dir `kept` has no row for vanishes), and `refs`, when the artifact
+    * keeps a `_refs` sidecar, its whole new content. */
+  private case class Rewrite(path: String, kept: DataFrame,
+      partCols: Seq[String], dirs: Seq[String], refs: Option[DataFrame])
+
+  /** THE commit of every rewrite of landed data: partials folds,
+    * tombstone vacuums, retention, and the `_refs` sidecar each of them
+    * refreshes. A mutator plans its [[Rewrite]] and calls this once;
+    * this is the one place that picks the protocol.
+    *
+    * Staged swap (an artifact without a manifest):
+    *   1. stage: `kept` lands under `<root>/.graft_stage` at the same
+    *      relative partition paths, the new sidecar under
+    *      `.graft_stage/_refs` (two concurrent Spark jobs; nothing live
+    *      is touched, so `kept` may read the dirs it replaces);
+    *   2. marker: `<root>/.graft_commit` lists every dir the commit
+    *      moves, `+dir` with a staged replacement and `-dir` without
+    *      (written under a temp name, then renamed in);
+    *   3. renames in marker order, data dirs first and `_refs` last:
+    *      the live dir to `.graft_old/<dir>`, then the staged one in;
+    *   4. cleanup: delete the stage, then `.graft_old`, then the marker
+    *      LAST.
+    *
+    * What [[recover]] does at each crash point:
+    *   - in 1 or 2 (no marker): nothing live moved, the artifact is the
+    *     pre-commit one; [[enter]] deletes the stale stage (roll back);
+    *   - in 3 (marker): roll FORWARD. Every `+dir` still in the stage
+    *     moves in, its live dir aside first if still there; every
+    *     `-dir` still live moves aside. The result is exactly the
+    *     post-commit artifact, for SUM folds as for any other;
+    *   - in 4 (marker, nothing left to move): roll-forward only
+    *     finishes the cleanup. A marker deleted before `.graft_old`
+    *     would let a crash between the two deletes roll a FINISHED swap
+    *     back and restore every partition it dropped.
+    *
+    * Manifest publish (an artifact with a manifest; several artifacts
+    * in one call must all have one): each sidecar is staged as in 1,
+    * then `kept` lands as fresh files next to the live ones
+    * ([[stageNewFiles]]), each sidecar's marker goes in GATED on the
+    * publish (`@file`: a live file the publish drops), ONE
+    * [[Manifests.commitGroup]] publishes every artifact together, and
+    * each sidecar swaps in through 3–4. Readers resolve a snapshot and
+    * never see a half state. A crash before the publish leaves
+    * unreferenced files that the next [[enter]] reaps, and [[recover]]
+    * finds the gate file still listed and rolls the sidecar BACK; a
+    * crash inside the publish rolls forward at the next touch of any
+    * member; after it, the gate file is gone from the snapshot and the
+    * sidecar rolls FORWARD. The sidecar thus always matches the
+    * published data: a fold's old sidecar would not cover its new
+    * merged partition, a vacuum's new one would not flag the rows the
+    * old data still holds. (The gate is a dropped file, not a version
+    * number: an ingest commit between the crash and the repair bumps
+    * the version but keeps every file.)
+    *
+    * Directory rename is atomic on POSIX and HDFS; on an object store
+    * the same crash analysis holds with the store's equivalent (e.g. a
+    * manifest pointer swap). */
+  private def commitRewrites(spark: SparkSession, rws: Seq[Rewrite]): Unit = {
+    val fs = new Path(rws.head.path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def stageRefs(rw: Rewrite): Unit = rw.refs.foreach(_.coalesce(1)
+      .write.mode("overwrite").parquet(s"${rw.path}/$StageDir/$RefsDir"))
+    if (Manifests.isEnabled(fs, new Path(rws.head.path))) {
+      val content = new Array[Seq[String]](rws.size)
+      inParallel(rws.zipWithIndex.map { case (rw, i) => () => {
+        val root = new Path(rw.path)
+        // the sidecar stages FIRST: `kept` may re-read the dirs the new
+        // files are about to move into
+        stageRefs(rw)
+        content(i) = Manifests.resolveFiles(fs, root).get
+          .filterNot(f => rw.dirs.exists(d => f.startsWith(d + "/"))) ++
+          stageNewFiles(spark, root, fs, rw.kept, rw.partCols)
+      }}: _*)
+      val sidecars = rws.filter(_.refs.isDefined).map { rw =>
+        val root = new Path(rw.path)
+        val gate = Manifests.resolveFiles(fs, root).get
+          .find(f => rw.dirs.exists(d => f.startsWith(d + "/")))
+          .getOrElse(sys.error(s"$root: the commit replaces no live file"))
+        mark(fs, root, Seq("@" + gate, "+" + RefsDir))
+        root
+      }
+      Manifests.commitGroup(fs, rws.map(rw => new Path(rw.path)).zip(content))
+      sidecars.foreach(rollForward(fs, _, Seq("+" + RefsDir)))
+    } else {
+      require(rws.size == 1,
+        s"${rws.map(_.path)}: a multi-artifact commit needs manifests")
+      val rw = rws.head
+      val root = new Path(rw.path)
+      val stage = new Path(root, StageDir)
+      // append, not overwrite: an overwrite would delete the sidecar
+      // staging beside it ([[enter]] already removed any stale stage)
+      inParallel(
+        () => rw.kept.write.mode("append").partitionBy(rw.partCols: _*)
+          .parquet(stage.toString),
+        () => stageRefs(rw))
+      val staged =
+        if (!fs.exists(stage)) Nil
+        else partitionLeafDirs(fs, stage).map(relPath(stage, _)).sorted
+      val entries = (rw.dirs ++ staged).distinct
+        .map(d => (if (staged.contains(d)) "+" else "-") + d) ++
+        rw.refs.map(_ => "+" + RefsDir)
+      mark(fs, root, entries)
+      rollForward(fs, root, entries)
+    }
+  }
+
+  /** Step 2 of [[commitRewrites]]: the marker, its `lines` written
+    * under a temp name and renamed in. */
+  private def mark(fs: FileSystem, root: Path, lines: Seq[String]): Unit = {
+    val tmp = new Path(root, MarkerTmp)
+    val out = fs.create(tmp, true)
+    try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+    move(fs, tmp, new Path(root, CommitMarker))
+  }
+
+  /** Steps 3–4, idempotent: a `+dir` whose staged copy has already
+    * moved in, or a `-dir` already aside, is skipped, so the commit and
+    * [[recover]] run the same code from wherever the last run stopped. */
+  private def rollForward(fs: FileSystem, root: Path,
+                          entries: Seq[String]): Unit = {
+    val (stage, old) = (new Path(root, StageDir), new Path(root, OldDir))
+    entries.foreach { e =>
+      val (staged, d) = (e.head == '+', e.tail)
+      val live = new Path(root, d)
+      if (!staged || fs.exists(new Path(stage, d))) {
+        if (fs.exists(live)) move(fs, live, new Path(old, d))
+        if (staged) move(fs, new Path(stage, d), live)
+      }
+    }
+    Seq(stage, old, new Path(root, CommitMarker)).foreach(fs.delete(_, true))
+  }
+
+  private def move(fs: FileSystem, src: Path, dst: Path): Unit = {
+    if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
+    require(fs.rename(src, dst), s"staged commit: rename $src -> $dst failed")
+  }
+
+  /** THE repair after a crash anywhere in [[commitRewrites]] (its doc
+    * lists the crash points): finishes a crashed manifest publish, then
+    * rolls a staged swap whose marker landed forward, or back when its
+    * gate says the publish it waits for never happened. It moves files,
+    * so only a mutator runs it, on entry ([[enter]]; single writer);
+    * readers resolve the same post-commit view without moving anything
+    * ([[readLanded]]). */
+  private[streaming] def recover(fs: FileSystem, root: Path): Unit = {
+    Manifests.recoverGroup(fs, root)
+    val marker = new Path(root, CommitMarker)
+    if (!fs.exists(marker)) return
+    val (gate, entries) =
+      Manifests.readLines(fs, marker).partition(_.startsWith("@"))
+    val live = Manifests.resolveFiles(fs, root).getOrElse(Nil).toSet
+    if (gate.forall(g => !live.contains(g.tail))) rollForward(fs, root, entries)
+    else Seq(new Path(root, StageDir), marker).foreach(fs.delete(_, true))
+  }
+
+  /** The reader's side of [[commitRewrites]]: a landed artifact's
+    * committed content, resolved WITHOUT moving anything, so a read
+    * that overlaps a commit never races its renames. A manifest
+    * artifact reads its latest snapshot. Otherwise the directory; where
+    * a staged swap's marker stands (a crashed commit, or one in
+    * flight), each dir it names is read from wherever its post-commit
+    * copy is now: the stage while a `+dir` is still there, live once
+    * moved in, nowhere for a `-dir`. A crash anywhere in the swap thus
+    * reads as the post-commit artifact, never a short one. `schema`
+    * fixes the columns; without it they are inferred, as a directory
+    * read infers them. (A read that overlaps a commit in flight may
+    * fail on a dir the commit just moved; only a manifest isolates
+    * concurrent readers.) */
+  private[streaming] def readLanded(spark: SparkSession, path: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      mergeSchema: Boolean = false): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rd(s: Option[org.apache.spark.sql.types.StructType]) =
+      s.fold(spark.read)(spark.read.schema(_))
+        .option("mergeSchema", mergeSchema.toString)
+    def under(base: Path, dirs: Seq[String],
+              s: Option[org.apache.spark.sql.types.StructType]) =
+      rd(s).option("basePath", base.toString)
+        .parquet(dirs.map(new Path(base, _).toString): _*)
+    val marker = new Path(root, CommitMarker)
+    Manifests.resolveFiles(fs, root) match {
+      case Some(files) =>
+        require(files.nonEmpty, s"manifest at $path lists no files")
+        under(root, files, schema)
+      case None if !fs.exists(marker) => rd(schema).parquet(path)
+      case None =>
+        val lines = Manifests.readLines(fs, marker)
+        val stage = new Path(root, StageDir)
+        val (staged, movedIn) = lines.filter(_.startsWith("+")).map(_.tail)
+          .filter(_ != RefsDir).partition(d => fs.exists(new Path(stage, d)))
+        val live = partitionLeafDirs(fs, root).map(relPath(root, _))
+          .filterNot(lines.map(_.tail).toSet) ++
+          movedIn.filter(d => fs.exists(new Path(root, d)))
+        val sides = Seq(root -> live, stage -> staged).filter(_._2.nonEmpty)
+        if (sides.isEmpty) return rd(schema).parquet(path)
+        // one schema for both sides, so partition columns type alike
+        val s = schema.getOrElse(sides.map { case (b, ds) => under(b, ds, None)
+            .schema }.reduce((a, b) => b.foldLeft(a)((m, f) =>
+              if (m.fieldNames.contains(f.name)) m else m.add(f))))
+        sides.map { case (b, ds) => under(b, ds, Some(s)) }
+          .reduce(_.unionByName(_))
+    }
+  }
+
+  /** Mutator entry: [[recover]], then reap what no commit will use: an
+    * undecided commit's stage (the roll-back) and, on a manifest
+    * artifact, every file the snapshot does not list
+    * ([[Manifests.cleanupUnreferenced]]; after it the directory listing
+    * IS the snapshot, so the mutator's directory reads are
+    * snapshot-consistent). False when the artifact was never written. */
+  private def enter(fs: FileSystem, root: Path): Boolean = {
+    if (!fs.exists(root)) return false
+    recover(fs, root)
+    Seq(StageDir, MarkerTmp, ManifestStageDir).map(new Path(root, _))
+      .filter(fs.exists).foreach(fs.delete(_, true))
+    Manifests.cleanupUnreferenced(fs, root)
+    true
+  }
 
   // --------------------------------------- tombstone vacuum (landed state)
-
-  private val VacuumStageDir = ".graft_vacuum_stage"
-  private val VacuumOldDir = ".graft_vacuum_old"
 
   /** Right-to-be-forgotten for LANDED artifacts (q216): the write-path
     * purge (q199) keeps tombstoned subjects' rows from landing in NEW
@@ -2481,26 +2508,15 @@ object Streams {
     * signatures, candidate-pair logs, fingerprint claims, scored
     * manifests) outlive the purge — this vacuum closes that gap.
     * It rewrites ONLY the partitions that still reference a tombstoned
-    * id ([[compactLshIndex]]'s bounded-fan-out discipline: the
-    * affected-partition list is O(purge fan-out), collected as literal
-    * partition filters — the unaffected 99.9% of a 100 TB index is
-    * never read, never rewritten), dropping the referencing rows, and
-    * commits per partition with a staged atomic swap:
-    *
-    *   1. kept rows of every affected partition land in a dot-dir
-    *      stage (invisible to readers), then its completion marker;
-    *   2. per partition: rename live → old, rename staged → live
-    *      (a partition whose EVERY row was tombstoned has no staged
-    *      leaf — the rename-away IS its vacuum);
-    *   3. delete stage + old.
-    *
-    * Crash points: before the marker nothing moved (stale stage
-    * deleted on the next attempt); after it [[recoverVacuum]] rolls
-    * forward from the staged leaves. Partitions whose swap never
-    * started keep their rows — the vacuum is IDEMPOTENT (rerun
-    * re-detects them as affected), and [[tombstoneResiduals]] is the
-    * measured-zero gate (q193's residual-audit discipline) that
-    * proves convergence after any crash story.
+    * id (bounded fan-out: the affected-partition list is O(purge
+    * fan-out), collected as literal partition filters — the unaffected
+    * 99.9% of a 100 TB index is never read, never rewritten), dropping
+    * the referencing rows, through [[commitRewrites]]: a partition
+    * whose EVERY row was tombstoned vanishes. After a crash anywhere,
+    * [[recover]] leaves the pre- or the post-vacuum artifact, and the
+    * vacuum is IDEMPOTENT (a rerun re-detects whatever is still
+    * affected); [[tombstoneResiduals]] is the measured-zero gate (q193's
+    * residual-audit discipline) that proves convergence.
     *
     * `tombstones`' FIRST column is the erased id; `refCols` are the
     * artifact's columns that reference it (an index row dies if ANY
@@ -2508,77 +2524,18 @@ object Streams {
     * tombstone side is O(erasure requests) and broadcast. */
   def vacuumTombstoned(spark: SparkSession, path: String,
                        tombstones: DataFrame, refCols: Seq[String],
-                       partCols: Seq[String]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manifest-carrying artifacts publish through the snapshot layer
-    // (readers mid-flight keep their resolved file set) — the group
-    // protocol with a single member
-    if (Manifests.isEnabled(fs, root)) {
-      vacuumTombstonedGroup(spark, Seq((path, refCols, partCols)),
-        tombstones)
-      return
-    }
-    recoverVacuum(fs, root)
-    if (!fs.exists(root)) return
-    // Cast the tombstone side to the ref columns' OWN type before
-    // anything hashes or compares it: the `_refs` bloom hashes string
-    // forms while the verify read compares natively, so a type pairing
-    // whose numeric coercion matches but whose string forms differ
-    // (double 11.0 vs long 11) would otherwise give the bloom a FALSE
-    // negative — a skipped partition the legacy full scan would have
-    // vacuumed. One common type is required so there is exactly one
-    // equality semantics for detection, verify, and rewrite alike.
-    val (tomb, hit) = phase(s"vac tombPrep $path") {
-      tombPrep(spark, path, tombstones, refCols)
-    }
-    // O(affected partitions) driver list — bounded by the purge
-    // fan-out, the same bounded-collect contract as lshIndexHistory.
-    // Detection consults the `_refs` sidecar when the artifact carries
-    // one (O(partitions) summary rows + a verify read pruned to bloom
-    // candidates — the full-index detection scan of verdict-r13
-    // "What's wrong #1" happens only on legacy sidecar-less artifacts).
-    val affected = phase(s"vac detect $path") {
-      detectAffected(spark, path, tomb, hit, partCols)
-    }
-    if (affected.isEmpty) return
-    // kept rows of the affected partitions only: the read is
-    // partition-pruned by the literal filter (plan-asserted in
-    // StreamsSpec), the anti-join drops every row referencing a
-    // tombstoned id. Materialized ONCE (localCheckpoint — the group
-    // path's discipline): the stage write and the sidecar refresh both
-    // consume it, where re-deriving it per consumer would re-read the
-    // affected partitions and re-run the anti-join a second time.
-    // O(purge fan-out) rows, the same bound the staging already holds.
-    val survivors = phase(s"vac survivors $path") {
-      vacuumAffectedRead(spark, path, affected, partCols)
-        .join(tomb, hit, "left_anti")
-        .localCheckpoint(true)
-    }
-    // the two STAGE-side Spark jobs are independent (the survivor
-    // stage write touches only the stage dir; the sidecar's staged
-    // rewrite reads the old `_refs` files and the MATERIALIZED
-    // survivors, never a live data partition) — overlap them (guide
-    // §2.6). The commits stay strictly ordered: data swap first, then
-    // the sidecar flip — the reverse order could leave a sidecar
-    // claiming positions gone while a crash left the data holding
-    // them (a false negative for the rerun's detection).
-    var refsStaged = false
-    phase(s"vac stage both $path") {
-      inParallel(
-        () => vacuumStageWrite(root, fs, survivors, partCols),
-        () => refsStaged = refsRefreshStage(spark, path, affected, refCols,
-          partCols, survivors = Some(survivors)))
-    }
-    phase(s"vac swap+commit $path") {
-      vacuumSwapStaged(root, fs, affected, partCols)
-      if (refsStaged) refsStageCommit(fs, root)
-    }
-  }
+                       partCols: Seq[String]): Unit =
+    vacuumTombstonedGroup(spark, Seq((path, refCols, partCols)), tombstones)
 
   /** The tombstone side, prepared once per artifact: cast to the ref
-    * columns' own type (see [[vacuumTombstoned]]'s coercion note) and
-    * broadcast, plus the hit predicate. */
+    * columns' own type and broadcast, plus the hit predicate. The cast
+    * comes before anything hashes or compares it: the `_refs` bloom
+    * hashes string forms while the verify read compares natively, so a
+    * type pairing whose numeric coercion matches but whose string forms
+    * differ (double 11.0 vs long 11) would otherwise give the bloom a
+    * FALSE negative — a skipped partition the full scan would have
+    * vacuumed. One common type is required so there is exactly one
+    * equality semantics for detection, verify, and rewrite alike. */
   private def tombPrep(spark: SparkSession, path: String,
                        tombstones: DataFrame, refCols: Seq[String])
       : (DataFrame, Column) = {
@@ -2621,92 +2578,57 @@ object Streams {
     (tomb, refCols.map(c => col(c) === col("__t")).reduce(_ || _))
   }
 
-  /** One artifact's staged (not yet published) manifest-mode vacuum.
-    * `refsStaged`: the sidecar's refreshed contents are already staged
-    * (written during the concurrent stage phase — guide §2.6) and
-    * await their fs-only [[refsStageCommit]] after the group publish. */
-  private case class StagedVacuum(path: String,
-      root: org.apache.hadoop.fs.Path, content: Seq[String],
-      affected: Seq[Row], refCols: Seq[String], partCols: Seq[String],
-      survivors: DataFrame, refsStaged: Boolean)
-
-  /** Tombstone vacuum over MULTIPLE manifest-carrying artifacts with
-    * ONE atomic publish — the index and its pair log move together
-    * (verdict-r14 "Next round" #1: a crash between the two separate
-    * vacuums left them mutually inconsistent until a rerun converged;
-    * a concurrent reader could see a half-swapped artifact).
+  /** Tombstone vacuum over several artifacts committed TOGETHER: one
+    * [[commitRewrites]] call, so manifest-carrying members move in ONE
+    * atomic publish — the index and its pair log (verdict-r14 "Next
+    * round" #1: a crash between two separate vacuums left them mutually
+    * inconsistent until a rerun converged; a concurrent reader could
+    * see a half-swapped artifact). More than one member therefore
+    * requires manifests on all of them.
     *
-    * Protocol per artifact: finish any crashed group publish
-    * ([[Manifests.recoverGroup]]), delete unreferenced files (the
-    * previous snapshot's replaced files and any crashed stage's
-    * orphans — after this the directory listing equals the snapshot,
-    * so the detection and kept-rows reads below are snapshot-
-    * consistent), detect affected partitions exactly like the legacy
-    * path, materialize the survivors (localCheckpoint — the refresh
-    * below must not re-read dirs that then hold old AND new files),
-    * and stage them as fresh uniquely-named files NEXT TO the old ones
-    * ([[stageNewFiles]] — nothing renamed away, mid-flight readers
-    * keep their snapshot). Then ONE [[Manifests.commitGroup]] flips
-    * every artifact to its new snapshot, and the `_refs` sidecars
-    * refresh from the already-materialized survivors.
-    *
-    * Crash anywhere before the group publish: no manifest changed —
-    * readers saw nothing, the rerun cleans the orphaned stage files
-    * and converges. Crash inside the publish: the intent rolls it
-    * forward at the next touch of ANY member. Residuals measured zero
-    * either way (the q193 audit discipline). */
+    * Per member, concurrently (each reads and stages only its own root
+    * — guide §2.6): [[enter]], detect the affected partitions
+    * ([[detectAffected]]: the `_refs` consult where the artifact keeps
+    * one), and materialize the survivors ONCE (localCheckpoint): the
+    * stage write and the sidecar refresh both consume them, where
+    * re-deriving per consumer would re-read the affected partitions and
+    * re-run the anti-join. O(purge fan-out) rows. */
   def vacuumTombstonedGroup(spark: SparkSession,
       artifacts: Seq[(String, Seq[String], Seq[String])],
       tombstones: DataFrame): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    // per-artifact staging is independent (each touches only its own
-    // root; nothing publishes until the single group commit below) —
-    // stage the members CONCURRENTLY (guide §2.6), then ONE atomic
-    // publish flips all of them together exactly as before.
-    def stageOne(path: String, refCols: Seq[String],
-                 partCols: Seq[String]): Option[StagedVacuum] = {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(hconf)
-      require(Manifests.isEnabled(fs, root),
-        s"$path carries no manifest — enable one or use vacuumTombstoned")
-      Manifests.recoverGroup(fs, root)
-      Manifests.cleanupUnreferenced(fs, root)
-      val (tomb, hit) = tombPrep(spark, path, tombstones, refCols)
-      val affected = detectAffected(spark, path, tomb, hit, partCols)
-      if (affected.isEmpty) None
-      else {
-        val survivors = vacuumAffectedRead(spark, path, affected, partCols)
+    require(artifacts.size == 1 || artifacts.forall { case (p, _, _) =>
+        val root = new Path(p)
+        Manifests.isEnabled(root.getFileSystem(hconf), root)
+      }, s"${artifacts.map(_._1)}: a group vacuum needs a manifest on " +
+        "every member; use vacuumTombstoned per artifact")
+    def plan(path: String, refCols: Seq[String],
+             partCols: Seq[String]): Option[Rewrite] = {
+      val root = new Path(path)
+      if (!enter(root.getFileSystem(hconf), root)) return None
+      val (tomb, hit) = phase(s"vac tombPrep $path") {
+        tombPrep(spark, path, tombstones, refCols)
+      }
+      val affected = phase(s"vac detect $path") {
+        detectAffected(spark, path, tomb, hit, partCols)
+      }
+      if (affected.isEmpty) return None
+      val survivors = phase(s"vac survivors $path") {
+        vacuumAffectedRead(spark, path, affected, partCols)
           .join(tomb, hit, "left_anti")
           .localCheckpoint(true)
-        val newFiles = stageNewFiles(spark, root, fs, survivors, partCols)
-        val affectedDirs = affected.map(relOfRow(_, partCols)).toSet
-        val prev = Manifests.resolveFiles(fs, root).get
-        val content = prev.filterNot(f =>
-          affectedDirs.exists(d => f.startsWith(d + "/"))) ++ newFiles
-        // stage the sidecar's refresh NOW, inside the concurrent
-        // staging phase (it reads only the old `_refs` files — still
-        // live — and the materialized survivors); its fs-only commit
-        // waits until after the group publish, keeping the durability
-        // order (sidecar never claims positions gone before the data
-        // snapshot that dropped them is published)
-        val refsStaged = refsRefreshStage(spark, path, affected, refCols,
-          partCols, survivors = Some(survivors))
-        Some(StagedVacuum(path, root, content, affected, refCols,
-          partCols, survivors, refsStaged))
       }
+      Some(Rewrite(path, survivors, partCols,
+        affected.map(relOfRow(_, partCols)),
+        refsRefreshed(spark, path, affected, refCols, partCols, survivors)))
     }
-    val staged = {
-      val out = Array.fill[Option[StagedVacuum]](artifacts.size)(None)
-      inParallel(artifacts.zipWithIndex.map {
-        case ((path, refCols, partCols), i) =>
-          () => out(i) = stageOne(path, refCols, partCols)
-      }: _*)
-      out.toSeq.flatten
-    }
-    if (staged.isEmpty) return
-    val fs = staged.head.root.getFileSystem(hconf)
-    Manifests.commitGroup(fs, staged.map(s => (s.root, s.content)))
-    staged.foreach(s => if (s.refsStaged) refsStageCommit(fs, s.root))
+    val planned = Array.fill[Option[Rewrite]](artifacts.size)(None)
+    inParallel(artifacts.zipWithIndex.map {
+      case ((path, refCols, partCols), i) =>
+        () => planned(i) = plan(path, refCols, partCols)
+    }: _*)
+    val rws = planned.toSeq.flatten
+    if (rws.nonEmpty) phase("vac commit") { commitRewrites(spark, rws) }
   }
 
   /** Independent per-artifact tombstone vacuums run CONCURRENTLY
@@ -2741,7 +2663,7 @@ object Streams {
       tombstones.select(col(tombstones.columns.head).as("__t")).distinct()
         .localCheckpoint(true))
     artifacts.map { case (path, refCols) =>
-      Manifests.read(spark, path, mergeSchema = true)
+      readLanded(spark, path, mergeSchema = true)
         .join(tomb, refCols.map(c => col(c) === col("__t")).reduce(_ || _),
           "left_semi")
         .select(lit(1L).as("__one"))
@@ -2759,7 +2681,7 @@ object Streams {
   private def stageNewFiles(spark: SparkSession,
       root: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
       kept: DataFrame, partCols: Seq[String]): Seq[String] = {
-    val stage = new org.apache.hadoop.fs.Path(root, ".graft_mstage")
+    val stage = new org.apache.hadoop.fs.Path(root, ManifestStageDir)
     fs.delete(stage, true)
     kept.write.partitionBy(partCols: _*).parquet(stage.toString)
     val moved = Manifests.dataFilesUnder(fs, stage).map { f =>
@@ -2782,34 +2704,19 @@ object Streams {
     * logs grow with ingest AGE even when nothing is erased
     * (storage-limitation, not right-to-be-forgotten). Rewrites only
     * the partitions containing at least one `expired` row through the
-    * SAME per-partition staged swap (a partition whose every row
-    * expired vanishes — e.g. a whole old micro-batch of hourly
-    * partials), and is idempotent exactly like the tombstone vacuum:
-    * a crashed run's unswapped partitions still hold expired rows and
-    * the rerun re-detects them. Valid for any log whose snapshot
-    * semantics are per-key over the retained horizon (time-keyed
-    * partials: dropping whole expired hours = dropping their events);
-    * composes with compaction — after a fold, retention rewrites the
-    * one merged partition. */
+    * SAME [[commitRewrites]] (a partition whose every row expired
+    * vanishes — e.g. a whole old micro-batch of hourly partials), and
+    * is idempotent exactly like the tombstone vacuum: a crashed run's
+    * partitions hold either all their rows or only the retained ones,
+    * and the rerun re-detects what is left. Valid for any log whose
+    * snapshot semantics are per-key over the retained horizon
+    * (time-keyed partials: dropping whole expired hours = dropping
+    * their events); composes with compaction — after a fold,
+    * retention rewrites the one merged partition. */
   def retentionVacuum(spark: SparkSession, path: String,
                       expired: org.apache.spark.sql.Column,
-                      partCols: Seq[String]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverVacuum(fs, root)
-    if (!fs.exists(root)) return
-    val affected = spark.read.option("mergeSchema", "true").parquet(path)
-      .filter(expired)
-      .select(partCols.map(col): _*).distinct().collect()
-    if (affected.isEmpty) return
-    // three-valued logic: a row where `expired` evaluates to NULL is
-    // not detected above, so the rewrite must RETAIN it — a bare
-    // !expired would silently drop it from the rewritten partition
-    stageAndSwapAffected(spark, root, fs,
-      vacuumAffectedRead(spark, path, affected.toSeq, partCols)
-        .filter(not(coalesce(expired, lit(false)))),
-      affected.toSeq, partCols)
-  }
+                      partCols: Seq[String]): Unit =
+    retention(spark, path, expired, partCols, zoneKey = None)
 
   /** Keyed retention — [[retentionVacuum]] with the sidecar discipline
     * the tombstone family got in round 14 (verdict-r14 What's-wrong
@@ -2828,126 +2735,42 @@ object Streams {
     * Falls back to the full scan on artifacts with no zone sidecar. */
   def retentionVacuumKeyed(spark: SparkSession, path: String,
                            keyCol: String, cutoff: Column,
-                           partCols: Seq[String]): Unit = {
-    val expired = col(keyCol) < cutoff
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverVacuum(fs, root)
-    if (!fs.exists(root)) return
-    // manifest-carrying artifacts: the same zone-pruned detection, but
-    // committed through the snapshot layer (stage fresh files next to
-    // the old, ONE atomic manifest publish, deferred physical cleanup)
-    if (Manifests.isEnabled(fs, root)) {
-      Manifests.recoverGroup(fs, root)
-      Manifests.cleanupUnreferenced(fs, root)
-      val affected = refsZoneCandidates(spark, path, keyCol,
-        (zmin, _) => zmin < cutoff, partCols) match {
-        case None =>
-          spark.read.option("mergeSchema", "true").parquet(path)
-            .filter(expired)
-            .select(partCols.map(col): _*).distinct().collect().toSeq
-        case Some((cands, uncov)) =>
-          vacuumDetectRead(spark, path, cands, uncov, partCols)
-            .map(_.filter(expired).select(partCols.map(col): _*)
-              .distinct().collect().toSeq)
-            .getOrElse(Nil)
-      }
-      if (affected.isEmpty) return
-      val survivors = vacuumAffectedRead(spark, path, affected, partCols)
-        .filter(not(coalesce(expired, lit(false))))
-        .localCheckpoint(true)
-      val newFiles = stageNewFiles(spark, root, fs, survivors, partCols)
-      val affectedDirs = affected.map(relOfRow(_, partCols)).toSet
-      val prev = Manifests.resolveFiles(fs, root).get
-      Manifests.commitGroup(fs, Seq((root,
-        prev.filterNot(f =>
-          affectedDirs.exists(d => f.startsWith(d + "/"))) ++ newFiles)))
-      refsRefresh(spark, path, affected, Nil, partCols,
-        survivors = Some(survivors))
-      return
-    }
-    refsZoneCandidates(spark, path, keyCol,
-      (zmin, _) => zmin < cutoff, partCols) match {
-      case None => retentionVacuum(spark, path, expired, partCols)
+                           partCols: Seq[String]): Unit =
+    retention(spark, path, col(keyCol) < cutoff, partCols,
+      zoneKey = Some((keyCol, cutoff)))
+
+  /** The retention body: detect the partitions holding an `expired`
+    * row — from the zone maps of `zoneKey` (key column, cutoff) when
+    * given and present, else by a full scan — then commit their
+    * retained rows and the refreshed sidecar. */
+  private def retention(spark: SparkSession, path: String, expired: Column,
+                        partCols: Seq[String],
+                        zoneKey: Option[(String, Column)]): Unit = {
+    val root = new Path(path)
+    if (!enter(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        root)) return
+    def expiredParts(read: DataFrame): Seq[Row] =
+      read.filter(expired).select(partCols.map(col): _*).distinct()
+        .collect().toSeq
+    val affected = zoneKey.flatMap { case (keyCol, cutoff) =>
+      refsZoneCandidates(spark, path, keyCol, (zmin, _) => zmin < cutoff,
+        partCols)
+    } match {
+      case None =>
+        expiredParts(spark.read.option("mergeSchema", "true").parquet(path))
       case Some((cands, uncov)) =>
-        val affected = vacuumDetectRead(spark, path, cands, uncov, partCols)
-          .map(_.filter(expired).select(partCols.map(col): _*)
-            .distinct().collect().toSeq)
-          .getOrElse(Nil)
-        if (affected.isEmpty) return
-        stageAndSwapAffected(spark, root, fs,
-          vacuumAffectedRead(spark, path, affected, partCols)
-            .filter(not(coalesce(expired, lit(false)))),
-          affected, partCols)
-        refsRefresh(spark, path, affected, Nil, partCols)
+        vacuumDetectRead(spark, path, cands, uncov, partCols)
+          .map(expiredParts).getOrElse(Nil)
     }
-  }
-
-  /** The vacuum family's shared commit: stage `kept` as the full
-    * replacement content of the affected partitions (dot-dir stage +
-    * completion marker), then swap per partition — rename live→old,
-    * staged→live (no staged leaf = every row dropped = the
-    * rename-away IS the vacuum), delete stage+old. Crash recovery:
-    * [[recoverVacuum]]. */
-  private def stageAndSwapAffected(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      kept: DataFrame, affected: Seq[Row], partCols: Seq[String]): Unit = {
-    vacuumStageWrite(root, fs, kept, partCols)
-    vacuumSwapStaged(root, fs, affected, partCols)
-  }
-
-  /** The stage HALF of [[stageAndSwapAffected]]: the Spark job that
-    * writes the kept rows under the stage dir and drops the
-    * completion marker. Touches nothing live — safe to overlap with
-    * other stage-side jobs of the same vacuum (the sidecar's staged
-    * rewrite), never with the swap. */
-  private def vacuumStageWrite(root: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem, kept: DataFrame,
-      partCols: Seq[String]): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(root, VacuumStageDir)
-    val old = new org.apache.hadoop.fs.Path(root, VacuumOldDir)
-    fs.delete(stage, true)
-    fs.delete(old, true)
-    kept.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(stage.toString)
-    fs.create(new org.apache.hadoop.fs.Path(stage, StageCompleteMarker)).close()
-  }
-
-  /** The swap HALF of [[stageAndSwapAffected]]: driver-side renames
-    * only (move each affected live dir aside, staged dir in). Must run
-    * strictly after [[vacuumStageWrite]]'s marker lands. */
-  private def vacuumSwapStaged(root: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem, affected: Seq[Row],
-      partCols: Seq[String]): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(root, VacuumStageDir)
-    val old = new org.apache.hadoop.fs.Path(root, VacuumOldDir)
-    affected.foreach { r =>
-      // Hive-escaped path segments (ExternalCatalogUtils handles the
-      // characters Spark escapes on write — space/':'/'%'/… — and maps
-      // null to __HIVE_DEFAULT_PARTITION__): raw interpolation would
-      // miss the on-disk escaped directory for any string partition
-      // value and silently no-op that partition's swap.
-      val rel = partCols.zipWithIndex.map { case (c, i) =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(c,
-            Option(r.get(i)).map(_.toString).orNull)
-      }.mkString("/")
-      val live = new org.apache.hadoop.fs.Path(root, rel)
-      val aside = new org.apache.hadoop.fs.Path(old, rel)
-      val staged = new org.apache.hadoop.fs.Path(stage, rel)
-      fs.mkdirs(aside.getParent)
-      if (fs.exists(live))
-        require(fs.rename(live, aside),
-          s"vacuum: cannot move $live aside")
-      if (fs.exists(staged)) {
-        fs.mkdirs(live.getParent)
-        require(fs.rename(staged, live),
-          s"vacuum: commit rename $staged -> $live failed; " +
-            "recoverVacuum rolls forward from the completed stage")
-      } // no staged leaf: every row was dropped — gone is correct
-    }
-    fs.delete(stage, true)
-    fs.delete(old, true)
+    if (affected.isEmpty) return
+    // three-valued logic: a row where `expired` evaluates to NULL is
+    // not detected above, so the rewrite must RETAIN it — a bare
+    // !expired would silently drop it from the rewritten partition
+    val kept = vacuumAffectedRead(spark, path, affected, partCols)
+      .filter(not(coalesce(expired, lit(false))))
+    commitRewrites(spark, Seq(Rewrite(path, kept, partCols,
+      affected.map(relOfRow(_, partCols)),
+      refsRefreshed(spark, path, affected, Nil, partCols, kept))))
   }
 
   /** The vacuum's read of the affected partitions: an OR-of-ANDs of
@@ -3309,43 +3132,22 @@ object Streams {
     reads.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Post-swap sidecar refresh: recompute the affected partitions'
-    * summary rows from the survivors and replace them (a vanished
-    * partition simply loses its row). Staleness is never unsafe — a
-    * vacuum only REMOVES rows, so a stale summary is a superset →
-    * false positives only — but refreshing stops erased ids from
-    * re-flagging their old partitions on every later vacuum. The
-    * replace is stage-and-rename: a crash leaves the old sidecar
-    * (conservative) or none (legacy full-scan fallback). */
-  private def refsRefresh(spark: SparkSession, path: String,
+  /** The sidecar's new content after a rewrite of `affected`: the old
+    * rows of every other partition plus fresh summary rows of the
+    * `survivors` (a vanished partition simply loses its row); None
+    * without a sidecar. Staleness is never unsafe — a vacuum only
+    * REMOVES rows, so a stale summary is a superset → false positives
+    * only — but refreshing stops erased ids from re-flagging their old
+    * partitions on every later vacuum. The frame reads the OLD `_refs`
+    * files, which stay live until [[commitRewrites]] swaps the staged
+    * copy in. */
+  private def refsRefreshed(spark: SparkSession, path: String,
       affected: Seq[Row], refCols: Seq[String], partCols: Seq[String],
-      survivors: Option[DataFrame] = None): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
+      survivors: DataFrame): Option[DataFrame] = {
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (refsRefreshStage(spark, path, affected, refCols, partCols,
-        survivors))
-      refsStageCommit(fs, root)
-  }
-
-  /** The STAGE half of [[refsRefresh]] — the Spark job that computes
-    * the refreshed sidecar rows and writes them under the sidecar's
-    * stage dir. Reads only the OLD `_refs` files (still live until
-    * [[refsStageCommit]]) and, when the caller pre-materialized them,
-    * the survivors — with `survivors = Some(...)` it touches no live
-    * data partition, so it is safe to OVERLAP with the vacuum's own
-    * stage write (guide §2.6); the survivors = None spelling re-reads
-    * the swapped partitions and must stay strictly post-swap. Returns
-    * true when a staged sidecar awaits the commit. Crash between stage
-    * and commit: the old sidecar stays (stale = position superset =
-    * conservative), the orphaned stage dir is deleted by the next
-    * stage. */
-  private def refsRefreshStage(spark: SparkSession, path: String,
-      affected: Seq[Row], refCols: Seq[String], partCols: Seq[String],
-      survivors: Option[DataFrame] = None): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val refs = new org.apache.hadoop.fs.Path(root, RefsDir)
-    if (!refsHasData(fs, refs)) return false
+    val refs = new Path(root, RefsDir)
+    if (!refsHasData(fs, refs)) return None
     // `<=>`: same null-safe predicate as vacuumAffectedRead, so a
     // null-valued affected partition's summary row is replaced too
     val affectedPred = affectedPredicate(affected, partCols)
@@ -3361,78 +3163,25 @@ object Streams {
     val zoneCols = old.columns.filter(_.startsWith("zmin_"))
       .map(_.stripPrefix("zmin_")).toSeq
     val keepOld = old.filter(!affectedPred)
-    // survivors of the affected partitions: a pre-materialized frame
-    // when the caller has one (the manifest path, where a post-commit
-    // directory re-read would see old AND new files until cleanup),
-    // else a pruned re-read of the swapped partitions; if every
-    // partition vanished there is nothing left to summarize
-    val freshDf =
-      if (refCols.isEmpty && zoneCols.isEmpty) None
-      else survivors match {
-        case Some(df) => Some(refsSummaryOf(df, refCols, partCols, zoneCols))
-        case None =>
-          if (partitionLeafDirs(fs, root).isEmpty) None
-          else Some(refsSummaryOf(
-            vacuumAffectedRead(spark, path, affected, partCols),
-            refCols, partCols, zoneCols))
-      }
-    refsReplaceStage(fs, root, freshDf.fold(keepOld)(
-      keepOld.unionByName(_, allowMissingColumns = true)))
-    true
+    Some(if (refCols.isEmpty && zoneCols.isEmpty) keepOld
+      else keepOld.unionByName(
+        refsSummaryOf(survivors, refCols, partCols, zoneCols),
+        allowMissingColumns = true))
   }
 
-  /** Replaces the sidecar's contents wholesale (it is O(partitions)
-    * tiny rows — one file). The staged write may READ the very sidecar
-    * it replaces, which is safe without materializing first: the plan
-    * executes DURING the stage write, while the old `_refs` files
-    * still exist — the delete+rename happen strictly after. (A
-    * localCheckpoint here was one extra job per refresh for nothing.)
-    * Stage-and-rename: a crash leaves the old sidecar (stale =
-    * position superset = conservative) or none (legacy full-scan
-    * fallback) — never a false negative. */
-  private def refsReplace(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, rows: DataFrame): Unit = {
-    refsReplaceStage(fs, root, rows)
-    refsStageCommit(fs, root)
-  }
-
-  /** The Spark-job half of [[refsReplace]]: write the new contents
-    * under the sidecar stage dir (old `_refs` untouched, still
-    * readable by the plan being written — see the note above). */
-  private def refsReplaceStage(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, rows: DataFrame): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(root, ".graft_refs_stage")
-    fs.delete(stage, true)
-    rows.coalesce(1).write.parquet(stage.toString)
-  }
-
-  /** The commit half of [[refsReplace]]: delete old sidecar, staged
-    * one in. Strictly after the data swap when a vacuum pairs them —
-    * a sidecar claiming positions gone while the data still holds
-    * them would be a FALSE NEGATIVE for the rerun's detection. */
-  private def refsStageCommit(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val refs = new org.apache.hadoop.fs.Path(root, RefsDir)
-    val stage = new org.apache.hadoop.fs.Path(root, ".graft_refs_stage")
-    fs.delete(refs, true)
-    require(fs.rename(stage, refs),
-      s"refs replace: rename $stage -> $refs failed")
-  }
-
-  /** Sidecar twin of the batch-partition folds ([[compactLshIndex]] /
-    * [[compactMinMergePartials]]): the merged batch_id=-1 partition's
-    * summary row is the POSITION UNION of the folded rows — derivable
-    * with no refCols knowledge. Exact when the fold only moves rows; a
-    * superset when the merge drops rows (distinct/min-merge) —
-    * conservative either way, and it keeps detection pruned on
-    * compacted indexes instead of the merged bulk partition turning
-    * into a permanent uncovered candidate. No-op without a sidecar. */
-  private[streaming] def refsFoldBatches(spark: SparkSession, path: String,
-      prefixCols: Seq[String], latestBatchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
+  /** Sidecar twin of [[compactPartials]]: the merged batch_id=-1
+    * partition's summary row is the POSITION UNION of the folded rows —
+    * derivable with no refCols knowledge. Exact when the fold only
+    * moves rows; a superset when the merge drops rows
+    * (distinct/min-merge) — conservative either way, and it keeps
+    * detection pruned on compacted indexes instead of the merged bulk
+    * partition turning into a permanent uncovered candidate. None
+    * without a sidecar. */
+  private def refsFolded(spark: SparkSession, path: String,
+      prefixCols: Seq[String], latestBatchId: Long): Option[DataFrame] = {
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!refsHasData(fs, new org.apache.hadoop.fs.Path(root, RefsDir)))
-      return
+    if (!refsHasData(fs, new Path(root, RefsDir))) return None
     val summary = spark.read.option("mergeSchema", "true")
       .parquet(s"$path/$RefsDir")
     // schema-driven: fold whichever families the sidecar maintains —
@@ -3453,7 +3202,7 @@ object Streams {
       .groupBy(prefixCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("batch_id", lit(-1L))
-    refsReplace(fs, root, keep.unionByName(merged, allowMissingColumns = true))
+    Some(keep.unionByName(merged, allowMissingColumns = true))
   }
 
   /** The q193 residual-audit discipline applied to a landed artifact:
@@ -3467,59 +3216,10 @@ object Streams {
     // snapshot-aware: on a manifest artifact the audit reads the LIVE
     // file set (replaced files awaiting physical cleanup are not
     // residuals — no reader can resolve them anymore)
-    Manifests.read(spark, path, mergeSchema = true)
+    readLanded(spark, path, mergeSchema = true)
       .join(tomb, refCols.map(c => col(c) === col("__t")).reduce(_ || _),
         "left_semi")
       .count()
-  }
-
-  /** Repairs an artifact caught mid-[[vacuumTombstoned]] swap. A
-    * COMPLETE stage (marker present) rolls forward: every staged leaf
-    * replaces its live partition, moved-aside originals are dropped.
-    * An incomplete stage rolls back: nothing was renamed yet (renames
-    * start only after the marker), so restoring any stray old leaves
-    * and deleting the stage returns the artifact to its pre-vacuum
-    * state. Either way the vacuum's rerun converges, and the residual
-    * audit proves it. */
-  private def recoverVacuum(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(root, VacuumStageDir)
-    val old = new org.apache.hadoop.fs.Path(root, VacuumOldDir)
-    if (!fs.exists(stage) && !fs.exists(old)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage, StageCompleteMarker))) {
-      leafDirs(fs, stage).foreach { leaf =>
-        val live = new org.apache.hadoop.fs.Path(root, relPath(stage, leaf))
-        fs.delete(live, true)
-        fs.mkdirs(live.getParent)
-        require(fs.rename(leaf, live),
-          s"recoverVacuum: roll-forward rename $leaf -> $live failed")
-      }
-    } else if (fs.exists(old)) {
-      leafDirs(fs, old).foreach { leaf =>
-        val live = new org.apache.hadoop.fs.Path(root, relPath(old, leaf))
-        if (!fs.exists(live)) {
-          fs.mkdirs(live.getParent)
-          require(fs.rename(leaf, live),
-            s"recoverVacuum: roll-back rename $leaf -> $live failed")
-        }
-      }
-    }
-    fs.delete(stage, true)
-    fs.delete(old, true)
-  }
-
-  /** Partition leaf directories under `dir`: dirs holding at least one
-    * data file (names not starting with `_`/`.` — markers and commit
-    * files don't make a leaf). */
-  private def leafDirs(fs: org.apache.hadoop.fs.FileSystem,
-                       dir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.Path] = {
-    val st = fs.listStatus(dir)
-    val subs = st.filter(_.isDirectory).toSeq
-      .flatMap(s => leafDirs(fs, s.getPath))
-    val hasData = st.exists(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    (if (hasData) Seq(dir) else Nil) ++ subs
   }
 
   private def relPath(base: org.apache.hadoop.fs.Path,

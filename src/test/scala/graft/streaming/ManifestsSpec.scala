@@ -189,6 +189,24 @@ class ManifestsSpec extends SparkSpec {
       .forall(_.startsWith("build=2/")))
   }
 
+  test("a monitor snapshot of a manifest log counts the snapshot, not the files a fold replaced") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_msnap")
+    val log = s"$dir/log"
+    (0L to 2L).foreach { b =>
+      Streams.writeBatchPartition(
+        Seq(("a", 10L), ("b", 5L)).toDF("source", "tokens"), b, log)
+    }
+    Manifests.enableFromListing(fsOf(log), hp(log))
+    def tokens = rowsOf(Streams.mixtureWeightsSnapshot(spark, log)
+      .select(col("source"), col("tokens")))
+    assert(tokens === Seq(Seq("a", "30"), Seq("b", "15")))
+    Streams.compactSummedPartials(spark, log,
+      _.groupBy(col("source")).agg(sum(col("tokens")).as("tokens")))
+    // the replaced batch files stay on disk until the next mutator's
+    // entry; the snapshot must not count them
+    assert(tokens === Seq(Seq("a", "30"), Seq("b", "15")))
+  }
+
   test("continued ingest and compaction keep an enabled manifest current") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ming")
     val log = s"$dir/log"

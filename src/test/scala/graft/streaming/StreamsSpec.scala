@@ -1193,11 +1193,27 @@ class StreamsSpec extends SparkSpec {
   test("compaction before the first commit is a no-op, not an exception") {
     val ghost = java.nio.file.Files.createTempDirectory("graft_ghost")
       .toString + "/never_written"
-    Streams.compactMinMergePartials(spark, ghost, Streams.kmvMerge())
-    Streams.compactSummedPartials(spark, ghost,
-      _.groupBy(col("source")).agg(sum(col("tokens")).as("tokens")))
+    def foldAll(log: String): Unit = {
+      Streams.compactMinMergePartials(spark, log, Streams.kmvMerge())
+      Streams.compactSummedPartials(spark, log,
+        _.groupBy(col("source")).agg(sum(col("tokens")).as("tokens")))
+      Streams.compactLshIndex(spark, log)
+      Streams.compactZorderIndex(spark, log)
+    }
+    foldAll(ghost)
     assert(!new java.io.File(ghost).exists(),
       "a fold ahead of the monitor's first batch must leave nothing behind")
+    // a log whose every batch landed empty: the directory exists, but no
+    // data file does — schema inference would fail, the fold must not
+    val empty = java.nio.file.Files.createTempDirectory("graft_emptylog")
+      .toString + "/log"
+    (0L to 2L).foreach(b => Streams.writeBatchPartition(
+      Seq.empty[(String, Long)].toDF("source", "tokens"), b, empty))
+    assert(new java.io.File(empty).isDirectory)
+    foldAll(empty)
+    assert(new java.io.File(empty).list().forall(_.startsWith("_")) &&
+      !new java.io.File(empty).list().exists(_.startsWith(".")),
+      "folding an all-empty log must write nothing")
   }
 
   test("min-merge compaction folds the KMV log to merged+latest, snapshot unchanged") {
@@ -1441,32 +1457,37 @@ class StreamsSpec extends SparkSpec {
     Streams.compactSummedPartials(spark, toks, sumMerge)
     assert(rowsOf(Streams.mixtureWeightsSnapshot(spark, toks)) === before)
 
-    // crash point A — between the two commit renames (stage is
-    // complete and marked): the snapshot path must roll FORWARD
+    // crash point A — mid-swap (the stage is complete and the commit
+    // marker names the merged partition; the live one is already moved
+    // aside): the snapshot must read as rolled FORWARD
     val logA = s"$dir/tokensA"
     copyDir(toks, logA)
-    copyDir(logA, logA + ".graft_compact_stage")
-    new java.io.File(logA + ".graft_compact_stage/_GRAFT_STAGE_COMPLETE")
-      .createNewFile()
-    assert(new java.io.File(logA).renameTo(
-      new java.io.File(logA + ".graft_compact_old")))
+    copyDir(s"$logA/batch_id=-1", s"$logA/.graft_stage/batch_id=-1")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$logA/.graft_commit"),
+      "+batch_id=-1".getBytes("UTF-8"))
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$logA/.graft_old"))
+    assert(new java.io.File(s"$logA/batch_id=-1").renameTo(
+      new java.io.File(s"$logA/.graft_old/batch_id=-1")))
     assert(rowsOf(Streams.mixtureWeightsSnapshot(spark, logA)) === before,
-      "a mid-swap crash with a completed stage must roll forward")
-    assert(new java.io.File(logA).exists())
-    assert(!new java.io.File(logA + ".graft_compact_old").exists())
+      "a mid-swap crash with a completed stage must read as rolled forward")
+    // readers move nothing: the next mutator's entry finishes the swap
+    Streams.compactSummedPartials(spark, logA, sumMerge)
+    assert(rowsOf(Streams.mixtureWeightsSnapshot(spark, logA)) === before)
+    assert(new java.io.File(s"$logA/batch_id=-1").exists())
+    assert(!new java.io.File(s"$logA/.graft_old").exists())
 
-    // crash point B — stage NOT complete (no marker): roll BACK to the
-    // raw log; the half-written stage is swept
+    // crash point B — stage NOT complete (no marker): nothing live moved,
+    // the raw log stands; the next fold sweeps the half-written stage
     val logB = s"$dir/tokensB"
     copyDir(toks, logB)
     java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(logB + ".graft_compact_stage/batch_id=-1"))
-    assert(new java.io.File(logB).renameTo(
-      new java.io.File(logB + ".graft_compact_old")))
+      java.nio.file.Paths.get(s"$logB/.graft_stage/batch_id=-1"))
     assert(rowsOf(Streams.mixtureWeightsSnapshot(spark, logB)) === before,
-      "a crash before the stage completed must roll back to the raw log")
-    assert(new java.io.File(logB).exists())
-    assert(!new java.io.File(logB + ".graft_compact_stage").exists())
+      "a crash before the stage completed must leave the raw log")
+    Streams.compactSummedPartials(spark, logB, sumMerge)
+    assert(rowsOf(Streams.mixtureWeightsSnapshot(spark, logB)) === before)
+    assert(!new java.io.File(s"$logB/.graft_stage").exists())
   }
 
   test("incremental centroids: vector-SUM partials reproduce the batch q110 matrix") {
@@ -2763,31 +2784,32 @@ class StreamsSpec extends SparkSpec {
       .write.partitionBy("batch_id").parquet(log1)
     // staged kept-rows for batch 0 (doc 2 tombstoned), marker present
     Seq((1L, 0L)).toDF("doc_id", "batch_id")
-      .write.partitionBy("batch_id").parquet(s"$log1/.graft_vacuum_stage")
-    fs.create(p(s"$log1/.graft_vacuum_stage/_GRAFT_STAGE_COMPLETE")).close()
+      .write.partitionBy("batch_id").parquet(s"$log1/.graft_stage")
+    val marker = fs.create(p(s"$log1/.graft_commit"))
+    try marker.write("+batch_id=0".getBytes("UTF-8")) finally marker.close()
     // simulate: live batch 0 already renamed aside, stage not yet in
-    fs.mkdirs(p(s"$log1/.graft_vacuum_old"))
+    fs.mkdirs(p(s"$log1/.graft_old"))
     assert(fs.rename(p(s"$log1/batch_id=0"),
-      p(s"$log1/.graft_vacuum_old/batch_id=0")))
+      p(s"$log1/.graft_old/batch_id=0")))
     // any vacuum call repairs first — tombstones that hit nothing
     Streams.vacuumTombstoned(spark, log1, Seq(999L).toDF("doc_id"),
       Seq("doc_id"), Seq("batch_id"))
     assert(rowsOf(spark.read.parquet(log1).select(col("doc_id"))) ===
       Seq(Seq("1"), Seq("3")), "roll-forward must commit the staged rows")
-    assert(!fs.exists(p(s"$log1/.graft_vacuum_stage")) &&
-      !fs.exists(p(s"$log1/.graft_vacuum_old")))
+    assert(!fs.exists(p(s"$log1/.graft_stage")) &&
+      !fs.exists(p(s"$log1/.graft_old")))
     // --- roll BACK: crash before the marker (no renames happened) ---
     val d2 = java.nio.file.Files.createTempDirectory("graft_vrecb")
     val log2 = s"$d2/log"
     Seq((1L, 0L), (2L, 0L)).toDF("doc_id", "batch_id")
       .write.partitionBy("batch_id").parquet(log2)
     Seq((1L, 0L)).toDF("doc_id", "batch_id") // incomplete: NO marker
-      .write.partitionBy("batch_id").parquet(s"$log2/.graft_vacuum_stage")
+      .write.partitionBy("batch_id").parquet(s"$log2/.graft_stage")
     Streams.vacuumTombstoned(spark, log2, Seq(999L).toDF("doc_id"),
       Seq("doc_id"), Seq("batch_id"))
     assert(rowsOf(spark.read.parquet(log2).select(col("doc_id"))) ===
       Seq(Seq("1"), Seq("2")), "roll-back must leave the log pre-vacuum")
-    assert(!fs.exists(p(s"$log2/.graft_vacuum_stage")))
+    assert(!fs.exists(p(s"$log2/.graft_stage")))
   }
 
   test("tombstone vacuum on a NULL-valued partition keeps its non-tombstoned rows") {
