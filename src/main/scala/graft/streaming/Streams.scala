@@ -2215,8 +2215,10 @@ object Streams {
     val latest = landed.map(_._2).max
     if (!landed.exists { case (_, b) => b != latest && b != -1L }) return
     // the stage is a different directory from the one read, so the
-    // merge streams straight into it — nothing to materialize first
-    val merged = merge(spark.read.parquet(path)
+    // merge streams straight into it — nothing to materialize first.
+    // mergeSchema, as `vacuumAffectedRead`: a schema-evolved log's
+    // v1 footer must not drop the v2 columns from the folded partition
+    val merged = merge(spark.read.option("mergeSchema", "true").parquet(path)
         .filter(col("batch_id") =!= latest).drop("batch_id"))
       .withColumn("batch_id", lit(-1L))
     commitRewrites(spark, Seq(Rewrite(path, merged, prefixCols :+ "batch_id",

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
+import graft.io.LocalFs
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -15,8 +16,9 @@ import org.apache.hadoop.util.Progressable
   * armed scope always pass, so runs on different directories proceed
   * concurrently, each with its own count. Installed as `fs.file.impl`
   * with the filesystem cache disabled, so every `Path.getFileSystem` of
-  * a local path returns one of these. */
-class CrashingFileSystem extends LocalFileSystem {
+  * a local path returns one of these; it extends the engine's own
+  * [[LocalFs]], so an armed run does the I/O the engine does. */
+class CrashingFileSystem extends LocalFs {
   import CrashingFileSystem.mutating
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,

@@ -2880,6 +2880,36 @@ class StreamsSpec extends SparkSpec {
       Seq("7200", "click", "1", "99")))
   }
 
+  test("summed fold of a schema-evolved log keeps the evolved columns") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_evolvefold")
+    val log = s"$dir/hours"
+    Streams.writeBatchPartition(
+      Seq((3600L, "view", 5L)).toDF("hour_start", "event_type", "cnt"),
+      0L, log)
+    Streams.writeBatchPartition(
+      Seq((3600L, "view", 2L, 730L))
+        .toDF("hour_start", "event_type", "cnt", "value_cents"),
+      1L, log)
+    Streams.writeBatchPartition(
+      Seq((7200L, "click", 1L, 99L))
+        .toDF("hour_start", "event_type", "cnt", "value_cents"),
+      2L, log)
+    def centsSum = spark.read.option("mergeSchema", "true").parquet(log)
+      .agg(sum(col("value_cents"))).head().getLong(0)
+    assert(centsSum === 829L)
+    // sums every non-key column the read sees, as a monitor's fold does
+    Streams.compactSummedPartials(spark, log, df => {
+      val keys = Seq("hour_start", "event_type")
+      df.groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"),
+        df.columns.filterNot(c => keys.contains(c) || c == "cnt")
+          .map(c => sum(col(c)).as(c)).toSeq: _*)
+    })
+    assert(rowsOf(spark.read.parquet(log).select(col("batch_id")).distinct())
+      === Seq(Seq("-1"), Seq("2")))
+    assert(centsSum === 829L,
+      "the fold must keep the v2 column its v1 footer lacks")
+  }
+
   test("tombstone vacuum swaps STRING partitions with Hive-escaped values") {
     // a partition value containing characters Spark escapes on write
     // (space, ':') lands on disk as src=web%20crawl%3Av2 — the swap must
