@@ -1,9 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.streaming.Streams
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main (driver contract): runs every registered query on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
+/** Benchmark main (driver contract) and the one way to time or explain
+  * registered queries, at SPARK_GRAFT_SF_DIR (default sf0.1):
+  *  - `graft.Bench`: the driver sweep — every registered query, one
+  *    JSON line with per-query seconds, also written to bench_out.json;
+  *  - `graft.Bench <name>...`: the same, for just the named rows;
+  *  - `graft.Bench --reps N [name...]`: N chronological passes, median,
+  *    min and runs per row (medians merged into `GRAFT_MEDIANS_OUT`);
+  *  - `graft.Bench --explain <name>...`: `explain("formatted")` instead.
+  * An unknown name fails the run. A failed run prints its full stack
+  * trace; the sweep reports the row as -1, a named run exits non-zero.
   *
   * Methodology: one untimed warmup pass at sf0.001 first — JVM class
   * loading + whole-stage-codegen compilation otherwise dominates the
@@ -16,51 +25,64 @@ import org.apache.spark.sql.SparkSession
   * cached generated class JIT-warm, so best-of-2 reports steady-state
   * engine time instead of harness JIT noise, and regressions stay
   * visible. Queries execute into the `noop` sink so the full plan runs
-  * without driver-side collection.
+  * without driver-side collection; each row's scratch dirs are deleted
+  * once it has run ([[Streams.withScratchCleanup]]), outside the timer.
   */
 object Bench {
+  private type Row = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // host-contention telemetry (the BENCH_r11 lesson: a contended
-    // sweep recorded 2-36x inflated outliers that only a judge re-run
-    // could falsify): stamp the 1-min load average at start and end so
-    // a noisy ledger is identifiable FROM the ledger's stderr. A load
-    // far above the core count at start means the sweep ran against a
-    // busy host and its outliers are suspect — compare against the
-    // AbBench medians table in PLANS.md before reading any regression.
-    def loadAvg: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val loadStart = loadAvg
-    System.err.println(f"[bench] load_avg_start=$loadStart%.2f cores=" +
-      Runtime.getRuntime.availableProcessors)
+    args.toList match {
+      case Nil => sweep(sfDir)
+      case "--explain" :: names => explain(sfDir, names)
+      case "--reps" :: n :: names => passes(sfDir, n.toInt, names)
+      case names => named(sfDir, names)
+    }
+  }
+
+  /** The session and the named rows (all when none are, in name order)
+    * after one untimed pass at sf0.001 (class loading + codegen), whose
+    * failures are left to the timed runs to report. An unknown name
+    * fails before any session starts. */
+  private def warmedUp(names: Seq[String], sfDir: String)
+      : (SparkSession, Seq[(String, Row)]) = {
+    val rows = SparkEntry.subset(names).toSeq.sortBy(_._1)
     val spark = LocalSession.build()
+    val warmDir = Some("/root/testdata/sf0.001")
+      .filter(new java.io.File(_).isDirectory).getOrElse(sfDir)
+    rows.foreach { case (name, fn) => timed(spark, name, fn, warmDir, quiet = true) }
+    (spark, rows)
+  }
 
-    def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-             dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-
-    val warmDir = {
-      val d = "/root/testdata/sf0.001"
-      if (new java.io.File(d).isDirectory) d else sfDir
+  /** One timed noop execution; None when it fails, with its full stack
+    * trace unless `quiet`. The row's scratch dirs are removed after the
+    * clock stops. */
+  private def timed(spark: SparkSession, name: String, fn: Row, dir: String,
+                    quiet: Boolean = false): Option[Double] =
+    Streams.withScratchCleanup {
+      try {
+        val t0 = System.nanoTime()
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        if (!quiet) {
+          System.err.println(s"[bench] $name run failed:")
+          e.printStackTrace()
+        }
+        None
+      }
     }
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try exec(fn, warmDir) catch { case _: Throwable => () }
-    }
 
+  /** Best of two runs per row, -1 when both fail. */
+  private def bestOf2(spark: SparkSession, rows: Seq[(String, Row)],
+                      sfDir: String): Seq[(String, Double)] =
     // a failed query reports -1 (unambiguous in the JSON) and logs to
     // stderr — a near-zero "success" time would hide breakage
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    rows.map { case (name, fn) =>
       // each run fails independently: a crash on the second run still
       // reports the first run's valid timing, not a phantom failure
-      def once(): Option[Double] =
-        try {
-          val t0 = System.nanoTime()
-          exec(fn, sfDir)
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name run failed: ${e.getMessage}")
-          None
-        }
+      def once(): Option[Double] = timed(spark, name, fn, sfDir)
       Seq(once(), once()).flatten match {
         case Nil => name -> -1.0
         case ts =>
@@ -69,6 +91,83 @@ object Bench {
           name -> best
       }
     }
+
+  private def named(sfDir: String, names: Seq[String]): Unit = {
+    val (spark, rows) = warmedUp(names, sfDir)
+    finish(spark, bestOf2(spark, rows, sfDir).collect { case (n, t) if t < 0 => n })
+  }
+
+  /** A named run with a failed row exits non-zero: scripted callers
+    * must see the failure. */
+  private def finish(spark: SparkSession, failed: Seq[String]): Unit = {
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Warmed A/B timing in ONE JVM: `reps` chronological passes over the
+    * rows, median/min/runs per row.
+    *
+    * REGRESSION LEDGER (verdict-r14 "Next round" #5): single-pass
+    * wall-clock proved host-hostage even on quiet hosts (same-binary
+    * sweeps spread 1.4×; the eviction rows 3×), so the cross-round
+    * regression signal is the WARMED MEDIAN, not the sweep. When
+    * `GRAFT_MEDIANS_OUT` names a file, every run MERGES its per-query
+    * medians (with min/max/reps and the host load stamps) into that
+    * JSON — the per-round `medians_r{N}.json` artifact next to BENCH.
+    * The rule: compare medians across rounds, flag a query only above
+    * 1.35× with both rounds' load stamps attached; a sweep number
+    * disagreeing with a flat median is host drift, not code drift. */
+  private def passes(sfDir: String, reps: Int, names: Seq[String]): Unit = {
+    val loadStart = loadAvg
+    val (spark, rows) = warmedUp(names, sfDir)
+    val chrono = (1 to reps).flatMap(_ => rows.map { case (n, fn) =>
+        n -> timed(spark, n, fn, sfDir) })
+      .groupBy(_._1).view.mapValues(_.flatMap(_._2)).toMap
+    val medians = rows.map(_._1).filter(n => chrono(n).nonEmpty).map { n =>
+      val ts = chrono(n).sorted
+      // runs are CHRONOLOGICAL (pass order), not sorted — a tail that
+      // grows with pass index is JVM/state accumulation, not host noise
+      println(f"[bench] $n%-28s median ${ts(ts.size / 2)}%.3fs  " +
+        f"min ${ts.head}%.3fs  runs ${chrono(n).map(t => f"$t%.2f").mkString(",")}")
+      n -> ts
+    }
+    sys.env.get("GRAFT_MEDIANS_OUT").foreach { out =>
+      mergeMedians(out, sfDir, reps, loadStart, loadAvg, medians)
+    }
+    finish(spark, rows.map(_._1).filter(n => chrono(n).size < reps))
+  }
+
+  private def explain(sfDir: String, names: Seq[String]): Unit = {
+    require(names.nonEmpty, "--explain needs the query names to explain")
+    val rows = SparkEntry.subset(names).toSeq.sortBy(_._1)
+    val spark = LocalSession.build()
+    rows.foreach { case (name, fn) =>
+      val plan = Streams.withScratchCleanup(fn(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
+      println(s"==== $name ====\n$plan")
+    }
+    spark.stop()
+  }
+
+  private def loadAvg: Double = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.getSystemLoadAverage
+
+  private def sweep(sfDir: String): Unit = {
+    // host-contention telemetry (the BENCH_r11 lesson: a contended
+    // sweep recorded 2-36x inflated outliers that only a judge re-run
+    // could falsify): stamp the 1-min load average at start and end so
+    // a noisy ledger is identifiable FROM the ledger's stderr. A load
+    // far above the core count at start means the sweep ran against a
+    // busy host and its outliers are suspect — compare against the
+    // `--reps` medians table in PLANS.md before reading any regression.
+    val loadStart = loadAvg
+    System.err.println(f"[bench] load_avg_start=$loadStart%.2f cores=" +
+      Runtime.getRuntime.availableProcessors)
+    val (spark, rows) = warmedUp(Nil, sfDir)
+    val results = bestOf2(spark, rows, sfDir)
     // ms precision keeps the whole line ~2.7 KB so it survives intact in
     // the driver's bounded stdout-tail capture (nanos pushed it past the
     // window and rounds 1-5 recorded only a truncated fragment)
@@ -146,6 +245,31 @@ object Bench {
     println(compactLine(results, total, sfDir, loadJson))
     prior.foreach { case (name, lvl) =>
       org.apache.logging.log4j.core.config.Configurator.setLevel(name, lvl) }
+  }
+
+  /** Merge this run's medians into the artifact (last write wins per
+    * query name — re-running a family refreshes its rows). */
+  private def mergeMedians(path: String, sfDir: String, reps: Int,
+      loadStart: Double, loadEnd: Double,
+      entries: Seq[(String, Seq[Double])]): Unit = {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val mapper = new ObjectMapper()
+    val f = new java.io.File(path)
+    val rootNode = (if (f.exists()) mapper.readTree(f) else mapper.createObjectNode())
+      .asInstanceOf[ObjectNode]
+    val qs = Option(rootNode.get("queries")).getOrElse(rootNode.putObject("queries"))
+      .asInstanceOf[ObjectNode]
+    def r3(v: Double) = math.rint(v * 1000) / 1000
+    entries.foreach { case (n, ts) =>
+      qs.putObject(n).put("median", r3(ts(ts.size / 2))).put("min", r3(ts.head))
+        .put("max", r3(ts.last)).put("reps", reps).put("sf", sfDir)
+        .put("load_avg_start", r3(loadStart)).put("load_avg_end", r3(loadEnd))
+    }
+    rootNode.put("rule",
+      "compare medians across rounds; flag > 1.35x with load stamps")
+    java.nio.file.Files.writeString(f.toPath,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(rootNode) + "\n")
   }
 
   /** The driver-parsed final line, guaranteed under `budget` bytes.

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-mode SparkSession factory for every runnable main in
-  * this repo (Bench, Verify, the stress harnesses, the dev probes).
+  * this repo (Bench, Verify, Scale, StreamBench).
   * Nine hand-copied builder blocks drifted before this existed — the
   * round-6 q17 outage was exactly this class of drift (a config
   * present in some copies, absent where it mattered). Parallelism
@@ -74,9 +74,10 @@ object LocalSession {
       ("org.apache.spark.sql.execution.streaming.checkpointing." +
         "FileSystemBasedCheckpointFileManager"))
 
-  def build(defaultCpus: String = "4",
-            extra: Map[String, String] = Map.empty): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+  /** `local[SPARK_GRAFT_CPUS]`, 4 cores when unset. `extra` overrides
+    * [[engineConfs]] (perfbench's traced run installs its counters). */
+  def build(extra: Map[String, String] = Map.empty): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

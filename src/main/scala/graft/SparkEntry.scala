@@ -556,6 +556,17 @@ object SparkEntry {
     "q231_reindex_serving" -> (StreamingQ.q231ReindexServing _),
   )
 
+  /** The registry restricted to `names`, all of it when `names` is
+    * empty. The mains that take query names (Verify, Bench) all go
+    * through here: a typo'd name must fail the run, where a plain
+    * filter would run nothing and exit green. */
+  def subset(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (names.isEmpty) all else all.view.filterKeys(names.toSet).toMap
+  }
+
   /** DuckDB-equivalent SQL per query key (same parquet tables). */
   def oracleSql: Map[String, String] = Map(
     "q1_grade_dist" -> Parity.q1Sql,

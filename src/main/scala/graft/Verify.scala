@@ -8,19 +8,10 @@ object Verify {
     * args subset the registry (local iteration; the driver passes 2). */
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val subset = args.drop(2).toSet
-    // a typo'd name must fail loudly — filterKeys would silently verify
-    // nothing and exit green (round-8 advice)
-    val unknown = subset -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.mkString(", ")}")
+    val queries = SparkEntry.subset(args.drop(2).toSeq)
     val spark = LocalSession.build()
-    if (subset.isEmpty)
-      run(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql)
-    else
-      run(spark, sfDir, outDir,
-        SparkEntry.queries.view.filterKeys(subset).toMap,
-        SparkEntry.oracleSql.view.filterKeys(subset).toMap)
+    run(spark, sfDir, outDir, queries,
+      SparkEntry.oracleSql.view.filterKeys(queries.keySet).toMap)
     spark.stop()
   }
 

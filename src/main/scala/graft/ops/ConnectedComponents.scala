@@ -61,8 +61,8 @@ object ConnectedComponents {
   def assign(edgesIn: DataFrame): DataFrame = assignCounted(edgesIn)._1
 
   /** [[assign]] plus the number of contraction rounds it took — the
-    * quantity the O(log n) claim is about; surfaced for StressBench
-    * and convergence monitoring. */
+    * quantity the O(log n) claim is about; surfaced for the q46/q55
+    * laws of graft.Scale and convergence monitoring. */
   def assignCounted(edgesIn: DataFrame): (DataFrame, Int) = {
     // localCheckpoint (eager) per round: truncates the logical plan,
     // which otherwise NESTS per round (two unions + agg + join each) —

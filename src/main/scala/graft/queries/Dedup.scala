@@ -442,7 +442,7 @@ object Dedup {
   def clusters(docs: DataFrame): DataFrame = clustersCounted(docs)._1
 
   /** [[clusters]] plus the number of propagation rounds (=
-    * diameter(G) + 1 convergence check) — surfaced for StressBench's
+    * diameter(G) + 1 convergence check) — surfaced for graft.Scale's
     * q46-vs-q55 round comparison. */
   def clustersCounted(docs: DataFrame): (DataFrame, Int) =
     clustersFromEdgesCounted(verifiedEdges(docs))
@@ -1424,7 +1424,7 @@ object Dedup {
     * (cc → 0). The coefficient says which regime the corpus is in —
     * and therefore whether q46's diameter-bounded propagation or
     * q55's star contraction is the right clustering spelling (the
-    * question the StressBench table answers empirically; this census
+    * question graft.Scale's q46/q55 laws answer empirically; this census
     * answers it from the data).
     *
     * Triangle counting: edges arrive id-oriented (doc_a < doc_b), so

@@ -158,7 +158,7 @@ object PipelineQ {
     * anyway against the demoted-id set, SIZE-GATED (the
     * contaminationAuto pattern): on a typical corpus demoted ids are a
     * tiny fraction and broadcast; on a boilerplate-saturated crawl —
-    * CurationStress's replication makes demoted ≈ (R−1)/R of ALL
+    * graft.Scale's replication makes demoted ≈ (R−1)/R of ALL
     * doc_ids — an unconditional broadcast hint would bypass the
     * planner's threshold and blow the driver, so above the gate the
     * anti-join degrades to the shuffle that is correct there.
@@ -651,7 +651,7 @@ object PipelineQ {
 
   /** The ONE merge of per-source root partials (ingest batches, scan
     * shards, replicas — any fan-out): xor of xors, (Σ sᵢ mod p) mod p.
-    * Shared by the q203 snapshot and the CurationStress monoid law so
+    * Shared by the q203 snapshot and graft.Scale's q200 monoid law so
     * the fold algebra lives in exactly one place beside its SQL
     * spelling. */
   def mergeRootPartials(partials: DataFrame): DataFrame =

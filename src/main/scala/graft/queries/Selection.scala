@@ -233,7 +233,7 @@ object Selection {
     // cut): the budget machinery reads it from four subtrees (class
     // masses, the class join-back, kept aggs, source totals) and
     // without this each subtree re-tokenizes the corpus — cost-neutral
-    // at sf0.1 (inside the host-noise band, AbBench medians 2.42 vs
+    // at sf0.1 (inside the host-noise band, warmed Bench --reps medians 2.42 vs
     // 2.44s), but at 100 TB it's one corpus scan + a ~32 B/doc narrow
     // frame instead of four corpus scans
     val perDoc = scored.localCheckpoint(true)

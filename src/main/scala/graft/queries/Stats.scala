@@ -305,7 +305,7 @@ object Stats {
     * Identical output bit-for-bit: same weights, same integer
     * arithmetic, same oracle (q102Sql).
     *
-    * Measured honestly (AbBench, sf0.1, warmed medians): fused 0.42s
+    * Measured honestly (Bench --reps, sf0.1, warmed medians): fused 0.42s
     * vs explode 0.35s — the explode's B× row stream is absorbed by
     * map-side combine (shuffle rows are O(sources·B) in BOTH
     * spellings; scan bytes identical), while the fused agg pays 2B

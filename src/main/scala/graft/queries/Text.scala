@@ -1085,8 +1085,8 @@ object Text {
     * map-side-filtered by the broadcast hot set) — one more scan than
     * q95 in exchange for a shuffle whose largest key is capped at the
     * K-th count. Columnar scans are cheap and re-parallelize freely;
-    * a skewed reducer does not. CurationStress measures the crossover
-    * on a replicated corpus. */
+    * a skewed reducer does not. graft.Scale measures the crossover
+    * on a replicated corpus (q95_skew vs q104_skew). */
   def q104BigramSkewSafe(s: SparkSession, dir: String,
                          hotPairs: Int = HotPairK): DataFrame = {
     val d = Tables.documents(s, dir)

@@ -202,25 +202,52 @@ object Streams {
     * wrappers) accumulates a dozen corpus copies under /tmp until
     * staging writes start failing. Deletion must wait for JVM exit —
     * each wrapper RETURNS a DataFrame lazily backed by these files,
-    * so a finally-block delete would break the caller's plan. */
+    * so a finally-block delete would break the caller's plan. A caller
+    * that consumes the returned DataFrame fully can bound the lifetime
+    * itself with [[withScratchCleanup]]. */
   def scratchDir(prefix: String): String = {
     cleanupHookInstalled
     val p = java.nio.file.Files.createTempDirectory(prefix)
     scratchDirs.add(p)
+    Option(scratchScope.get).foreach(_ += p)
     p.toString
   }
+
+  /** Runs `body`, then deletes every [[scratchDir]] this thread created
+    * inside it. For long-lived harness JVMs that execute a row to the
+    * end inside the block (a noop write, an explain, a collect): left to
+    * the JVM-exit hook, each streaming row's feeds, sinks and
+    * checkpoints stay on disk for the whole run (perfbench: 0.71 MB per
+    * ingest pass at sf0.01; ~41 MB over 15 sf0.1 row runs). Nothing may
+    * read the row's DataFrame after the block returns. Scopes nest; a
+    * dir belongs to the innermost one. */
+  def withScratchCleanup[A](body: => A): A = {
+    val outer = scratchScope.get
+    val mine = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    scratchScope.set(mine)
+    try body
+    finally {
+      scratchScope.set(outer)
+      mine.foreach { p =>
+        deleteTree(p)
+        if (!java.nio.file.Files.exists(p)) scratchDirs.remove(p)
+      }
+    }
+  }
+  private val scratchScope =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[java.nio.file.Path]]
   private val scratchDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
   private lazy val cleanupHookInstalled: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.forEach { p =>
-        try {
-          val s = java.nio.file.Files.walk(p)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-          finally s.close()
-        } catch { case _: Throwable => () } // never fail JVM exit
-      }))
+      scratchDirs.forEach(p => deleteTree(p))))
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
+    try {
+      val s = java.nio.file.Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder())
+        .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
+      finally s.close()
+    } catch { case _: Throwable => () } // never fail JVM exit or a row
 
   // ------------------------------------------------------------------ sinks
 

@@ -3245,6 +3245,23 @@ class StreamsSpec extends SparkSpec {
     assert(spark.read.parquet(log).count() === 5L)
   }
 
+  test("a streaming row run through withScratchCleanup leaves no graft_ dir behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs: Set[String] = Option(tmp.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("graft_")).map(_.getName).toSet
+    val session = spark // built first: its warehouse is a graft_wh dir
+    val before = graftDirs
+    val during = Streams.withScratchCleanup {
+      graft.SparkEntry.queries("q177_stream_dedup")(session, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save()
+      graftDirs -- before
+    }
+    // the row did stage its feed, sink and checkpoint under a scratch dir
+    assert(during.exists(_.startsWith("graft_q177")), s"no scratch dir seen: $during")
+    assert((graftDirs -- before).isEmpty,
+      s"scratch dirs outlived the block: ${graftDirs -- before}")
+  }
+
   // Streams.kafkaSource mirrors the reference's Kafka options 1:1
   // (Consumer.scala:50-56) but the spark-sql-kafka connector jar is not
   // shipped in this container, so `.load()` is untestable offline; the
